@@ -416,18 +416,6 @@ def main() -> None:
         # queries makes each number reproducible standalone; caching
         # WITHIN a query still works during its runs.
         spark.catalog.clearCache()
-        # ...but the SESSION-scoped dim cache must survive isolation:
-        # clearCache unpersists the Dims DataFrames (resetting their
-        # storage level for good), which would make every tax/refund/
-        # nexus query pay a dim rebuild — a measurement artifact, since
-        # any real session caches dims once (measured: +~1-1.5 s on
-        # each dims-family query).  Rebuild fresh cache-marked Dims;
-        # the next query's FIRST run materializes them and min-over-runs
-        # discards that warmup.
-        from tax_compliance_engine_spark import dims as dims_mod
-
-        dims_mod._DIMS_CACHE.clear()
-        dims_mod.load_dims(spark)
     gate["external_cores_max"] = round(ext_max, 2)
     gate["accounting_transients"] = transients
     gate["contended_queries"] = contended

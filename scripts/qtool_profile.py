@@ -49,10 +49,9 @@ def main() -> None:
 
     for name in names:
         fn = queries[name]
-        # warm at sf0.001 (JIT/codegen/broadcast-planning warmup)
-        fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+        # one untimed run on the profiled input (JIT/codegen/broadcast-
+        # planning warmup)
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         rows = []
         for r in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run{r}")
@@ -65,10 +64,6 @@ def main() -> None:
             t3 = time.perf_counter()
             rows.append((t1 - t0, t2 - t1, t3 - t2, t3 - t0))
         spark.catalog.clearCache()
-        from tax_compliance_engine_spark import dims as dims_mod
-
-        dims_mod._DIMS_CACHE.clear()
-        dims_mod.load_dims(spark)
         best = min(rows, key=lambda x: x[3])
         print(
             f"{name}: construct={best[0]:.3f}s plan={best[1]:.3f}s "

@@ -1,25 +1,31 @@
-"""Dimension loader: JSON seeds → small broadcast-ready DataFrames.
+"""Dimension loader: JSON seeds → small typed ``LocalRelation`` DataFrames.
 
 The reference embeds its dimension data in code (rates.py:63-764,
 compliance.py:98-164, refund_analyzer.py:71-92, calculator.py:96-113); here it
-ships as versioned JSON seeds (see scripts/extract_seed_dims.py) loaded into
-typed DataFrames.  All dims are KB-sized (≤ ~100 rows), so every join against
-them is an explicit broadcast hash join — no shuffle, regardless of fact-table
-scale.
+ships as versioned JSON seeds (see scripts/extract_seed_dims.py).  All dims
+are KB-sized (≤ ~100 rows), so each one is a plan constant: a ``LocalRelation``
+built from an Arrow table, typed by its ``schemas.*`` schema.  Its rows live
+in the plan itself — no Python RDD, no Python worker, no cache entry — so a
+``clearCache()`` cannot turn a dim back into per-action Python work, and
+every join against a dim stays a broadcast of a local table.
 
 ``Dims`` also exposes the raw Python rows; driver-side helpers (oracle SQL
-generation, report rendering) reuse them without touching Spark.
+generation, report rendering, the tax lookup maps) reuse them without
+touching Spark.
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
 from decimal import Decimal
-from functools import lru_cache
+from functools import cache, lru_cache
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from . import schemas
@@ -46,14 +52,26 @@ def seed_rows(name: str) -> tuple[dict, ...]:
     return tuple(raw)
 
 
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a ``LocalRelation``
+    typed exactly by ``schema``: the Arrow table is cast to the schema on
+    the way in, and the optimized plan is the relation itself."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _df(spark: SparkSession, name: str, schema: StructType) -> DataFrame:
     rows = [tuple(r[f.name] for f in schema.fields) for r in seed_rows(name)]
-    return spark.createDataFrame(rows, schema).cache()
+    return local_frame(spark, rows, schema)
 
 
 @dataclass(frozen=True)
 class Dims:
-    """The seven broadcast dimension DataFrames (SURVEY §1.1)."""
+    """The seven dimension DataFrames (SURVEY §1.1)."""
 
     state_rates: DataFrame
     local_rates: DataFrame
@@ -64,24 +82,10 @@ class Dims:
     sol_years: DataFrame
 
 
-# One Dims per SparkSession: dim DataFrames are .cache()'d so repeated
-# actions broadcast from the storage layer instead of re-evaluating the
-# Python-RDD-backed createDataFrame (each such evaluation costs a Python
-# worker round-trip PER ACTION — measured ~0.3-0.4 s per dim per query).
-_DIMS_CACHE: dict[int, Dims] = {}
-
-
+@cache
 def load_dims(spark: SparkSession) -> Dims:
-    key = id(spark)
-    cached = _DIMS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    dims = _load_dims(spark)
-    _DIMS_CACHE[key] = dims
-    return dims
-
-
-def _load_dims(spark: SparkSession) -> Dims:
+    """The session's dims, built once per SparkSession (the cache key pins
+    the session object, so a restarted session gets fresh frames)."""
     return Dims(
         state_rates=_df(spark, "state_rates", schemas.STATE_RATES_SCHEMA),
         local_rates=_df(spark, "local_rates", schemas.LOCAL_RATES_SCHEMA),

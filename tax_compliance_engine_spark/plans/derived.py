@@ -21,8 +21,9 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from ..dims import seed_rows
+from ..dims import local_frame, seed_rows
 from ..schemas import MONEY
 
 # Fixed analysis date for refund/calendar queries (orders span 1995-2001;
@@ -76,27 +77,23 @@ def city_map() -> list[tuple[str, int, str]]:
 PAID_MULTIPLIERS = ["0", "0.05", "0.08", "0.0825", "0.12"]  # o_orderkey % 5
 
 
-# Memoized per-session mapping dims, .cache()'d: re-evaluating a
-# Python-RDD-backed createDataFrame costs a Python worker round-trip on
-# EVERY action that broadcasts it (~0.3-0.4 s each).
-_MAP_DIMS: dict[int, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
+@functools.cache
 def _mapping_dims(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
-    cached = _MAP_DIMS.get(id(spark))
-    if cached is not None:
-        return cached
-    states = spark.createDataFrame(
-        list(enumerate(state_list())), "sidx long, state string"
-    ).cache()
-    cats = spark.createDataFrame(
+    """The three mapping tables as ``LocalRelation`` plan constants, built
+    once per session."""
+    states = local_frame(
+        spark,
+        list(enumerate(state_list())),
+        DataType.fromDDL("sidx long, state string"),
+    )
+    cats = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(category_list()) if c is not None],
-        "cidx long, item_category string",
-    ).cache()
-    cities = spark.createDataFrame(
-        city_map(), "cm_state string, cm_idx long, city string"
-    ).cache()
-    _MAP_DIMS[id(spark)] = (states, cats, cities)
+        DataType.fromDDL("cidx long, item_category string"),
+    )
+    cities = local_frame(
+        spark, city_map(), DataType.fromDDL("cm_state string, cm_idx long, city string")
+    )
     return states, cats, cities
 
 

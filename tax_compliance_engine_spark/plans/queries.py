@@ -11,21 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dims import Dims, load_dims
+from ..dims import load_dims
 from ..operators import calendar as cal
 from ..operators import nexus, refund, tax
 from ..schemas import MONEY
 from . import derived
-
-_DIMS_CACHE: dict[int, Dims] = {}
-
-
-def _dims(spark: SparkSession) -> Dims:
-    key = id(spark)
-    if key not in _DIMS_CACHE:
-        _DIMS_CACHE[key] = load_dims(spark)
-    return _DIMS_CACHE[key]
-
 
 def _utc(spark: SparkSession) -> SparkSession:
     """Pin the session TZ: the driver may hand us a session with a non-UTC
@@ -42,7 +32,7 @@ def _txns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tax_results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tax.calculate_tax(_txns(spark, sf_dir), _dims(spark))
+    return tax.calculate_tax(_txns(spark, sf_dir), load_dims(spark))
 
 
 def _d(c: str) -> F.Column:
@@ -84,7 +74,7 @@ def tax_calc_inclusive(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("transaction_id").cast("long") % 2 == 0, F.lit("inclusive")
         ).otherwise(F.lit("exclusive")),
     )
-    res = tax.calculate_tax(txns, _dims(spark))
+    res = tax.calculate_tax(txns, load_dims(spark))
 
     def cents(c: str, out: str) -> F.Column:
         return (F.col(c) * 100).cast("long").alias(out)
@@ -105,7 +95,7 @@ def tax_calc_inclusive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def use_tax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Use-tax credit clamp (F3, calculator.py:305-345): credit =
     min(tax_paid, tax); net = round(tax - credit)."""
-    results = tax.use_tax(_txns(spark, sf_dir), _dims(spark))
+    results = tax.use_tax(_txns(spark, sf_dir), load_dims(spark))
     return results.select(
         "transaction_id",
         "state",
@@ -144,7 +134,7 @@ def _refund_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     # include_reason=False: the oracle checks reason_prefix (the aggregation
     # key); skipping the formatted prose saves the per-row percent formatting
     return refund.analyze_overpayments(
-        _txns(spark, sf_dir), _dims(spark), derived.AS_OF, include_reason=False
+        _txns(spark, sf_dir), load_dims(spark), derived.AS_OF, include_reason=False
     )
 
 
@@ -252,7 +242,7 @@ def refund_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nexus_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     activity = nexus.state_activity(_txns(spark, sf_dir))
-    return nexus.check_nexus(activity, _dims(spark))
+    return nexus.check_nexus(activity, load_dims(spark))
 
 
 def nexus_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,9 +263,9 @@ def nexus_periodized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nexus status with measurement_period honored (SURVEY §2.9 extension):
     per-state activity restricted to each state's measurement window."""
     activity = nexus.periodized_activity(
-        _txns(spark, sf_dir), _dims(spark), derived.NEXUS_AS_OF
+        _txns(spark, sf_dir), load_dims(spark), derived.NEXUS_AS_OF
     )
-    return nexus.check_nexus(activity, _dims(spark)).select(
+    return nexus.check_nexus(activity, load_dims(spark)).select(
         "state_code",
         "has_nexus",
         _d("revenue_in_state"),
@@ -319,7 +309,7 @@ def filing_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return cal.filing_deadlines(
         spark,
-        _dims(spark),
+        load_dims(spark),
         derived.REGISTERED_STATES,
         derived.CALENDAR_YEAR,
         derived.CAL_AS_OF,
@@ -342,7 +332,7 @@ def filing_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rates_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _dims(spark)
+        load_dims(spark)
         .state_rates.select("state_code", "state_name", _d("avg_combined_rate"))
         .orderBy(F.desc("avg_combined_rate"), "state_code")
         .limit(10)
@@ -351,7 +341,7 @@ def rates_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rates_lowest10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _dims(spark)
+        load_dims(spark)
         .state_rates.filter(F.col("base_rate") > 0)
         .select("state_code", "state_name", _d("avg_combined_rate"))
         .orderBy("avg_combined_rate", "state_code")
@@ -361,7 +351,7 @@ def rates_lowest10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def no_tax_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _dims(spark)
+        load_dims(spark)
         .state_rates.filter(F.col("base_rate") == 0)
         .select("state_code")
         .orderBy("state_code")
@@ -373,7 +363,7 @@ def rates_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest combined rates (bucket='top'), the 10 lowest NONZERO rates
     (bucket='low'), and every no-sales-tax state (bucket='zero') in one
     marker-tagged union — O1 + O2 + P5 under a single hash gate."""
-    rates = _dims(spark).state_rates
+    rates = load_dims(spark).state_rates
     cols = ["state_code", "state_name", _d("avg_combined_rate")]
     top = (
         rates.select(*cols)
@@ -396,7 +386,7 @@ def rates_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def states_exempting_grocery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _dims(spark)
+        load_dims(spark)
         .state_exemptions.filter(F.col("category") == "grocery")
         .select("state_code")
         .orderBy("state_code")

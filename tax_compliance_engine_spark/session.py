@@ -2,9 +2,12 @@
 
 Defaults are tuned for correctness-first local runs but express the choices
 that matter on a 1000-executor cluster: AQE on (runtime coalescing + skew-join
-splitting), explicit shuffle partitioning, Arrow for the few pandas-UDF
-operators, and ANSI mode off only because the reference semantics are
-permissive (unknown states warn instead of raising — SURVEY §2 P4).
+splitting), explicit shuffle partitioning, and Arrow for the few pandas-UDF
+operators.  ANSI mode is left at Spark's default, which is on: overflows,
+bad casts and a missing key in ``element_at`` raise.  The permissive
+reference semantics (unknown states warn instead of raising — SURVEY §2 P4)
+are expressed in the plans instead, e.g. the tax lookups use
+``try_element_at``.
 """
 
 from __future__ import annotations
@@ -51,7 +54,8 @@ def get_spark(
             os.environ.get("SPARK_ARROW_MAX_RECORDS_PER_BATCH", "4000"),
         )
         # Dims are KB-sized; keep the default 10 MB broadcast threshold, but be
-        # explicit that broadcasting is expected (we also mark joins F.broadcast).
+        # explicit that broadcasting is expected (the refund, nexus and
+        # calendar dim joins are also marked F.broadcast).
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         # Deterministic session timezone so date/timestamp semantics match the
         # DuckDB oracle regardless of host TZ.

@@ -11,12 +11,15 @@ from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql.types import DecimalType
 
+from tax_compliance_engine_spark import schemas
+from tax_compliance_engine_spark.dims import Dims, seed_rows
 from tax_compliance_engine_spark.operators import tax
 from tax_compliance_engine_spark.schemas import TXN_SCHEMA
 
 
-def run_one(spark, dims, **kw):
+def txn(**kw):
     base = dict(
         transaction_id="t1",
         transaction_date=date(2024, 3, 15),
@@ -30,9 +33,16 @@ def run_one(spark, dims, **kw):
         pricing_model="exclusive",
     )
     base.update(kw)
-    df = spark.createDataFrame([Row(**base)], TXN_SCHEMA)
-    df = tax.normalize_transactions(df)
-    return tax.calculate_tax(df, dims).collect()[0]
+    return Row(**base)
+
+
+def price(spark, dims, rows):
+    df = tax.normalize_transactions(spark.createDataFrame(rows, TXN_SCHEMA))
+    return tax.calculate_tax(df, dims)
+
+
+def run_one(spark, dims, **kw):
+    return price(spark, dims, [txn(**kw)]).collect()[0]
 
 
 def test_tx_houston_golden(spark, dims):
@@ -245,6 +255,17 @@ def test_use_tax_credit(spark, dims):
     assert r.warnings == ["Credit applied for $30.00 tax already paid"]
 
 
+DIM_SCHEMAS = {
+    "state_rates": schemas.STATE_RATES_SCHEMA,
+    "local_rates": schemas.LOCAL_RATES_SCHEMA,
+    "state_exemptions": schemas.STATE_EXEMPTIONS_SCHEMA,
+    "category_aliases": schemas.CATEGORY_ALIASES_SCHEMA,
+    "nexus_thresholds": schemas.NEXUS_THRESHOLDS_SCHEMA,
+    "filing_due_day": schemas.FILING_DUE_DAY_SCHEMA,
+    "sol_years": schemas.SOL_YEARS_SCHEMA,
+}
+
+
 def test_dim_integrity(dims):
     # test_rates.py:21-31, 65-66
     rates = {r.state_code: r for r in dims.state_rates.collect()}
@@ -253,3 +274,103 @@ def test_dim_integrity(dims):
     assert rates["CA"].base_rate == Decimal("0.0725")
     assert rates["OR"].base_rate == Decimal("0")
     assert rates["AK"].base_rate == Decimal("0") and rates["AK"].has_local_taxes
+
+    assert set(DIM_SCHEMAS) == set(Dims.__dataclass_fields__)
+    for name, schema in DIM_SCHEMAS.items():
+        df = getattr(dims, name)
+        # declared types (Decimal precision and scale) and nullability
+        assert df.schema == schema, name
+        got = [tuple(r) for r in df.collect()]
+        # row for row, NULLs (notes, county, transaction_threshold) included
+        assert got == [tuple(r[f] for f in schema.names) for r in seed_rows(name)], name
+        for i, f in enumerate(schema.fields):
+            if isinstance(f.dataType, DecimalType):
+                assert {row[i].as_tuple().exponent for row in got} == {
+                    -f.dataType.scale
+                }, (name, f.name)
+        # a plan constant: no Python RDD behind it and no cache dependence
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), (name, plan)
+        assert "LogicalRDD" not in plan and "InMemoryRelation" not in plan, name
+    assert all(
+        DIM_SCHEMAS[name][col].nullable
+        for name, col in (
+            ("state_rates", "notes"),
+            ("local_rates", "county"),
+            ("nexus_thresholds", "transaction_threshold"),
+        )
+    )
+    assert any(r.transaction_threshold is None for r in dims.nexus_thresholds.collect())
+
+
+def jobs_run(spark, group, action):
+    """``action()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_basket_is_one_job_before_and_after_clear_cache(spark, dims):
+    basket = [
+        txn(transaction_id="b1", amount=Decimal("500.00"), city="Houston"),
+        txn(transaction_id="b2", state="CA", city="Los Angeles", item_category="Food"),
+        txn(
+            transaction_id="b3",
+            state="NY",
+            pricing_model="inclusive",
+            customer_type="wholesale",
+        ),
+    ]
+    first, jobs = jobs_run(
+        spark, "tax-basket-1", lambda: price(spark, dims, basket).collect()
+    )
+    assert len(first) == 3 and jobs == 1
+    spark.catalog.clearCache()
+    again, jobs = jobs_run(
+        spark, "tax-basket-2", lambda: price(spark, dims, basket).collect()
+    )
+    assert again == first and jobs == 1
+
+
+def test_every_seed_lookup_key(spark, dims):
+    states = {r["state_code"]: r for r in seed_rows("state_rates")}
+    no_tax = {
+        code
+        for code, r in states.items()
+        if r["base_rate"] == 0 and not r["has_local_taxes"]
+    }
+    local = seed_rows("local_rates")
+    exempt = seed_rows("state_exemptions")
+    rows = [
+        txn(transaction_id=f"lr{i}", state=r["state_code"], city=r["jurisdiction"])
+        for i, r in enumerate(local)
+    ] + [
+        txn(transaction_id=f"ex{i}", state=r["state_code"], item_category=r["category"])
+        for i, r in enumerate(exempt)
+    ]
+    got = {r.transaction_id: r for r in price(spark, dims, rows).collect()}
+    assert len(got) == len(rows)
+
+    # every state|city key: the city's own rate on top of the state's
+    for i, lr in enumerate(local):
+        r = got[f"lr{i}"]
+        want = float(states[lr["state_code"]]["base_rate"] + lr["rate"])
+        assert not r.is_exempt and r.warnings == [], lr
+        assert r.effective_rate == pytest.approx(want, abs=1e-9), lr
+
+    # every state|category key exempts, unless the state has no sales tax
+    for i, ex in enumerate(exempt):
+        r = got[f"ex{i}"]
+        code = ex["state_code"]
+        reason = (
+            f"{states[code]['state_name']} has no sales tax"
+            if code in no_tax
+            else f"{code} exempts {ex['category']}"
+        )
+        assert r.is_exempt and r.tax_amount == Decimal("0.00"), ex
+        assert r.exemption_reason == reason, ex
