@@ -18,12 +18,12 @@ import datetime as dt
 import sys
 from decimal import Decimal
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import reports
 from .console import ROUNDED, SIMPLE, Table, panel
-from .dims import load_dims
+from .dims import load_dims, local_frame
 from .operators import alerts as alerts_op
 from .operators import calendar as cal
 from .operators import nexus, refund, tax
@@ -115,7 +115,7 @@ def cmd_calculate(args: argparse.Namespace) -> None:
         print("Provide --amount and --state, or --file", file=sys.stderr)
         sys.exit(1)
 
-    txn = Row(
+    txn = dict(  # TXN_SCHEMA field order
         transaction_id="cli-calc",
         transaction_date=dt.date.today(),
         amount=Decimal(args.amount).quantize(Decimal("0.01")),
@@ -127,7 +127,9 @@ def cmd_calculate(args: argparse.Namespace) -> None:
         customer_type="retail",
         pricing_model="exclusive",
     )
-    df = tax.normalize_transactions(spark.createDataFrame([txn], TXN_SCHEMA))
+    df = tax.normalize_transactions(
+        local_frame(spark, [tuple(txn.values())], TXN_SCHEMA)
+    )
     r = tax.calculate_tax(df, dims).collect()[0]
     total_with_tax = r.taxable_amount + r.tax_amount
     print(

@@ -6,8 +6,9 @@ ships as versioned JSON seeds (see scripts/extract_seed_dims.py).  All dims
 are KB-sized (≤ ~100 rows), so each one is a plan constant: a ``LocalRelation``
 built from an Arrow table, typed by its ``schemas.*`` schema.  Its rows live
 in the plan itself — no Python RDD, no Python worker, no cache entry — so a
-``clearCache()`` cannot turn a dim back into per-action Python work, and
-every join against a dim stays a broadcast of a local table.
+``clearCache()`` cannot turn a dim back into per-action Python work.  The
+engine joins no dim: its layers read the seeds as literal-map lookups
+built from ``seed_rows``, and the frames serve callers and checks.
 
 ``Dims`` also exposes the raw Python rows; driver-side helpers (oracle SQL
 generation, report rendering, the tax lookup maps) reuse them without
@@ -53,11 +54,14 @@ def seed_rows(name: str) -> tuple[dict, ...]:
 
 
 def local_frame(
-    spark: SparkSession, rows: Iterable[Sequence], schema: StructType
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
 ) -> DataFrame:
     """``rows`` (tuples in ``schema`` field order) as a ``LocalRelation``
-    typed exactly by ``schema``: the Arrow table is cast to the schema on
-    the way in, and the optimized plan is the relation itself."""
+    typed exactly by ``schema`` (a ``StructType`` or a DDL string): the
+    Arrow table is cast to the schema on the way in, and the optimized plan
+    is the relation itself — no Python RDD, so no Python worker."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )

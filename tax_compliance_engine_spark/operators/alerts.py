@@ -16,14 +16,13 @@ want real overdue alerts pass an explicit ``deadlines`` DataFrame.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dims import Dims
 from . import calendar as cal
-
-ALERT_COLUMNS = ["severity", "state_code", "message", "action_required", "deadline"]
 
 
 def severity_rank() -> F.Column:
@@ -38,39 +37,46 @@ def severity_rank() -> F.Column:
 def nexus_alerts(status: DataFrame, registered_states: list[str]) -> DataFrame:
     """Unregistered-nexus (critical) and approaching-threshold (warning)
     alerts from a nexus status DataFrame (compliance.py:521-557)."""
-    registered = sorted({s.upper() for s in registered_states})
+    registered = tuple(sorted({s.upper() for s in registered_states}))
+    critical, warning = (
+        status.filter(cond).select(*cols)
+        for cond, cols in _nexus_alert_cols(registered)
+    )
+    return critical.unionByName(warning)
+
+
+@functools.lru_cache(maxsize=16)
+def _nexus_alert_cols(registered: tuple[str, ...]):
+    """Memoized (filter, alert columns) trees of the critical and warning
+    branches of ``nexus_alerts``, keyed by the sorted registered states, the
+    one parameter that enters them (the ``tax._calc_cols`` rationale)."""
     is_registered = (
         F.col("state_code").isin(*registered) if registered else F.lit(False)
     )
-
+    no_deadline = F.lit(None).cast("date").alias("deadline")
     critical = (
-        status.filter(F.col("has_nexus") & ~is_registered)
-        .withColumn("severity", F.lit("critical"))
-        .withColumn(
-            "message",
+        F.col("has_nexus") & ~is_registered,
+        (
+            F.lit("critical").alias("severity"),
+            F.col("state_code"),
             F.format_string(
                 "Economic nexus established in %s but not registered for "
                 "sales tax collection",
                 F.col("state_code"),
-            ),
-        )
-        .withColumn(
-            "action_required",
+            ).alias("message"),
             F.format_string(
                 "Register for sales tax in %s immediately. Revenue: $%s",
                 F.col("state_code"),
                 F.format_number(F.col("revenue_in_state"), 2),
-            ),
-        )
-        .withColumn("deadline", F.lit(None).cast("date"))
-        .select(*ALERT_COLUMNS)
+            ).alias("action_required"),
+            no_deadline,
+        ),
     )
-
     warning = (
-        status.filter(~F.col("has_nexus") & F.col("approaching_threshold"))
-        .withColumn("severity", F.lit("warning"))
-        .withColumn(
-            "message",
+        ~F.col("has_nexus") & F.col("approaching_threshold"),
+        (
+            F.lit("warning").alias("severity"),
+            F.col("state_code"),
             # Python's {:.0f} rounds half-to-even; Java's %.0f rounds half-up.
             # bround first so exact .5 ties (e.g. 94.5%) match the reference.
             F.format_string(
@@ -78,51 +84,45 @@ def nexus_alerts(status: DataFrame, registered_states: list[str]) -> DataFrame:
                 "revenue limit)",
                 F.col("state_code"),
                 F.bround(F.col("revenue_pct_of_threshold"), 0).cast("long"),
-            ),
-        )
-        .withColumn(
-            "action_required",
+            ).alias("message"),
             F.format_string(
                 "Monitor %s activity. Prepare registration materials "
                 "proactively.",
                 F.col("state_code"),
-            ),
-        )
-        .withColumn("deadline", F.lit(None).cast("date"))
-        .select(*ALERT_COLUMNS)
+            ).alias("action_required"),
+            no_deadline,
+        ),
     )
-    return critical.unionByName(warning)
+    return critical, warning
 
 
 def overdue_alerts(deadlines: DataFrame, as_of: dt.date) -> DataFrame:
     """Overdue-filing alerts from a deadlines DataFrame
     (compliance.py:560-584): critical when > 30 days late."""
+    return deadlines.filter(F.col("is_overdue")).select(*_overdue_alert_cols(as_of))
+
+
+@functools.lru_cache(maxsize=16)
+def _overdue_alert_cols(as_of: dt.date) -> tuple[Column, ...]:
+    """Memoized alert columns (severity, state_code, message,
+    action_required, deadline) of ``overdue_alerts``, keyed by ``as_of``,
+    the one parameter that enters them."""
     days_late = F.datediff(F.lit(as_of), F.col("due_date"))
     return (
-        deadlines.filter(F.col("is_overdue"))
-        .withColumn(
-            "severity",
-            F.when(days_late > 30, "critical").otherwise("warning"),
-        )
-        .withColumn(
-            "message",
-            F.format_string(
-                "%s return for %s to %s is %d days past due",
-                F.col("state_code"),
-                F.date_format("period_start", "yyyy-MM-dd"),
-                F.date_format("period_end", "yyyy-MM-dd"),
-                days_late,
-            ),
-        )
-        .withColumn(
-            "action_required",
-            F.format_string(
-                "File %s return immediately. Late penalties may apply.",
-                F.col("state_code"),
-            ),
-        )
-        .withColumn("deadline", F.col("due_date"))
-        .select(*ALERT_COLUMNS)
+        F.when(days_late > 30, "critical").otherwise("warning").alias("severity"),
+        F.col("state_code"),
+        F.format_string(
+            "%s return for %s to %s is %d days past due",
+            F.col("state_code"),
+            F.date_format("period_start", "yyyy-MM-dd"),
+            F.date_format("period_end", "yyyy-MM-dd"),
+            days_late,
+        ).alias("message"),
+        F.format_string(
+            "File %s return immediately. Late penalties may apply.",
+            F.col("state_code"),
+        ).alias("action_required"),
+        F.col("due_date").alias("deadline"),
     )
 
 

@@ -6,8 +6,9 @@ helpers (:171-200) as a ``sequence`` + ``explode`` generator — a UDTF-shaped
 source built entirely from Catalyst expressions:
 
   states × frequency → sequence(period starts) → explode → last_day bounds
-  → due-date rollover via add_months + make_date (F7) → filed-period
-  anti-probe (J8) → overdue/status columns.
+  → due-date rollover via add_months + make_date (F7), the due day a
+  literal-map lookup → filed-period probe (J8, a broadcast of the caller's
+  frame) → overdue/status columns.
 
 Dec→Jan due-date rollover falls out of ``add_months`` arithmetic; due days
 are ≤ 25 so ``make_date`` is always valid.
@@ -16,12 +17,14 @@ are ≤ 25 so ``make_date`` is always valid.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dims import Dims
+from ..dims import Dims, local_frame, seed_rows
 from ..schemas import DEFAULT_DUE_DAY
+from .tax import _map
 
 # Liability → frequency bucketing (compliance.py:186-200, F14).
 FREQ_MONTHLY_MIN = 4800
@@ -34,6 +37,49 @@ def determine_frequency_col(liability) -> F.Column:
         .when(liability >= FREQ_QUARTERLY_MIN, F.lit("quarterly"))
         .otherwise(F.lit("annual"))
     )
+
+
+@functools.lru_cache(maxsize=1)
+def _period_cols() -> dict[str, Column]:
+    """Memoized frequency-step and period trees of ``filing_deadlines``
+    (no parameter enters them; the ``tax._calc_cols`` rationale), keyed
+    by the column each one sets.  The due day is a ``try_element_at``
+    lookup into a literal map built once from the filing_due_day seed
+    (the ``tax._lookup_cols`` technique), ``DEFAULT_DUE_DAY`` on a miss."""
+    freq = F.col("frequency")
+    periods_per_year = (
+        F.when(freq == "monthly", F.lit(12))
+        .when(freq == "quarterly", F.lit(4))
+        .otherwise(F.lit(1))
+    )
+    months_per_period = (
+        F.when(freq == "monthly", F.lit(1))
+        .when(freq == "quarterly", F.lit(3))
+        .otherwise(F.lit(12))
+    )
+    period_end = F.last_day(
+        F.add_months(F.col("period_start"), months_per_period - F.lit(1))
+    )
+    due_days = _map(
+        (r["state_code"], r["due_day"]) for r in seed_rows("filing_due_day")
+    )
+    due_day = F.coalesce(
+        F.try_element_at(due_days, F.col("state_code")), F.lit(DEFAULT_DUE_DAY)
+    )
+    # Due date = day D of the month after period_end (F7).
+    next_month = F.add_months(period_end, 1)
+    return {
+        "step": (
+            F.when(freq == "monthly", F.expr("interval 1 month"))
+            .when(freq == "quarterly", F.expr("interval 3 month"))
+            .otherwise(F.expr("interval 12 month"))
+        ),
+        "period_end": period_end,
+        "due_date": F.make_date(F.year(next_month), F.month(next_month), due_day),
+        "estimated_liability": (
+            F.col("estimated_annual_liability") / periods_per_year
+        ).cast("decimal(18,6)"),
+    }
 
 
 def filing_deadlines(
@@ -53,8 +99,8 @@ def filing_deadlines(
     auto-determined from liability when not supplied (F14).
     """
     if isinstance(states, list):
-        base = spark.createDataFrame(
-            [(s.upper(),) for s in states], "state_code string"
+        base = local_frame(
+            spark, [(s.upper(),) for s in states], "state_code string"
         ).withColumn(
             "estimated_annual_liability",
             F.lit(str(estimated_annual_liability)).cast("decimal(18,2)"),
@@ -73,60 +119,18 @@ def filing_deadlines(
             "frequency", determine_frequency_col(F.col("estimated_annual_liability"))
         )
 
-    step = (
-        F.when(F.col("frequency") == "monthly", F.expr("interval 1 month"))
-        .when(F.col("frequency") == "quarterly", F.expr("interval 3 month"))
-        .otherwise(F.expr("interval 12 month"))
-    )
-    periods_per_year = (
-        F.when(F.col("frequency") == "monthly", F.lit(12))
-        .when(F.col("frequency") == "quarterly", F.lit(4))
-        .otherwise(F.lit(1))
-    )
-    months_per_period = (
-        F.when(F.col("frequency") == "monthly", F.lit(1))
-        .when(F.col("frequency") == "quarterly", F.lit(3))
-        .otherwise(F.lit(12))
-    )
-
-    df = (
-        base.withColumn(
-            "period_start",
-            F.explode(
-                F.sequence(
-                    F.make_date(F.lit(year), F.lit(1), F.lit(1)),
-                    F.make_date(F.lit(year), F.lit(12), F.lit(1)),
-                    step,
-                )
-            ),
-        )
-        .withColumn(
-            "period_end",
-            F.last_day(
-                F.add_months(F.col("period_start"), months_per_period - F.lit(1))
-            ),
-        )
-        .withColumn(
-            "estimated_liability",
-            (F.col("estimated_annual_liability") / periods_per_year).cast(
-                "decimal(18,6)"
-            ),
-        )
-    )
-
-    # Due date = day D of the month after period_end (F7); broadcast J6.
-    due_day_dim = dims.filing_due_day.select(
-        F.col("state_code").alias("_dd_state"), F.col("due_day").alias("_due_day")
-    )
-    next_month = F.add_months(F.col("period_end"), 1)
-    df = (
-        df.join(F.broadcast(due_day_dim), F.col("state_code") == F.col("_dd_state"), "left")
-        .withColumn("due_day", F.coalesce("_due_day", F.lit(DEFAULT_DUE_DAY)))
-        .withColumn(
-            "due_date",
-            F.make_date(F.year(next_month), F.month(next_month), F.col("due_day")),
-        )
-        .drop("_dd_state", "_due_day", "due_day")
+    cols = _period_cols()
+    df = base.withColumn(
+        "period_start",
+        F.explode(
+            F.sequence(
+                F.make_date(F.lit(year), F.lit(1), F.lit(1)),
+                F.make_date(F.lit(year), F.lit(12), F.lit(1)),
+                cols["step"],
+            )
+        ),
+    ).withColumns(
+        {c: cols[c] for c in ("period_end", "estimated_liability", "due_date")}
     )
 
     # Filed-period probe (J8, compliance.py:235-242, 396-400).
@@ -143,33 +147,25 @@ def filing_deadlines(
             & (F.col("period_start") == F.col("_fp_start"))
             & (F.col("period_end") == F.col("_fp_end")),
             "left",
-        ).drop("_fp_state", "_fp_start", "_fp_end")
-        df = df.withColumn("is_filed", F.coalesce("is_filed", F.lit(False)))
+        )
+        is_filed = F.coalesce("is_filed", F.lit(False))
     else:
-        df = df.withColumn("is_filed", F.lit(False))
+        is_filed = F.lit(False)
 
-    return (
-        df.withColumn(
-            "is_overdue", (F.col("due_date") < F.lit(as_of)) & ~F.col("is_filed")
-        )
-        .withColumn("days_until_due", F.datediff("due_date", F.lit(as_of)))
-        .withColumn(
-            "status",
-            F.when(F.col("is_filed"), "filed")
-            .when(F.col("is_overdue"), "overdue")
-            .otherwise("pending"),
-        )
-        .select(
-            "state_code",
-            "period_start",
-            "period_end",
-            "due_date",
-            "frequency",
-            "is_overdue",
-            "days_until_due",
-            "estimated_liability",
-            "status",
-        )
+    is_overdue = (F.col("due_date") < F.lit(as_of)) & ~is_filed
+    return df.select(
+        "state_code",
+        "period_start",
+        "period_end",
+        "due_date",
+        "frequency",
+        is_overdue.alias("is_overdue"),
+        F.datediff("due_date", F.lit(as_of)).alias("days_until_due"),
+        "estimated_liability",
+        F.when(is_filed, "filed")
+        .when(is_overdue, "overdue")
+        .otherwise("pending")
+        .alias("status"),
     )
 
 

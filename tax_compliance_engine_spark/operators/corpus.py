@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dims import local_frame
 from ..functions import bloom, hashing
 from .dedup import _doc_ngrams, _doc_tokens
 
@@ -224,7 +225,7 @@ def bm25_search(
             raise ValueError(f"query {qid} has no tokens")
         qrows.extend((qid, t) for t in terms)
     spark = docs.sparkSession
-    qtoks = spark.createDataFrame(qrows, "query_id long, token string")
+    qtoks = local_frame(spark, qrows, "query_id long, token string")
     # corpus side filtered to query tokens FIRST: tf/df see only postings
     # that can score (per-token tf/df are unchanged by the pre-filter, so
     # this stays ≡ the full prepared index the streaming path serves from)
@@ -408,7 +409,8 @@ def hybrid_search(
 
     qvec_ids = [qv for _, _, qv in queries]
     spark = docs.sparkSession
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(qid, qv) for qid, _, qv in queries],
         "query_id long, qvec_id long",
     )
@@ -935,7 +937,7 @@ def pack_sequences(
     for r in sorted(totals, key=lambda r: r["_shard"]):
         base_rows.append((int(r["_shard"]), acc))
         acc += int(r["_tot"])
-    bases = spark.createDataFrame(base_rows, "_shard long, _base long")
+    bases = local_frame(spark, base_rows, "_shard long, _base long")
 
     return (
         local.join(F.broadcast(bases), "_shard")
@@ -967,7 +969,8 @@ def mixture(
     and the keep decision is the same LCG hash as deterministic_sample, so
     mixtures are reproducible and composable with the other corpus ops."""
     spark = docs.sparkSession
-    rates = spark.createDataFrame(
+    rates = local_frame(
+        spark,
         [(s, float(r)) for s, r in sorted(weights.items())],
         f"{stratum_col} string, _rate double",
     )
@@ -1097,7 +1100,8 @@ def token_budget_mixture(
         F.size(tokens_col(F.col(text_col))).cast("long"), F.lit(0)
     )
     totals = docs.groupBy(stratum_col).agg(F.sum(n_toks).alias("_total"))
-    budget_df = docs.sparkSession.createDataFrame(
+    budget_df = local_frame(
+        docs.sparkSession,
         [(s, float(b)) for s, b in sorted(budgets.items())],
         f"{stratum_col} string, _budget double",
     )

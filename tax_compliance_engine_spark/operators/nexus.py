@@ -1,10 +1,10 @@
-"""Economic-nexus evaluation as a grouped-aggregate + broadcast-join plan.
+"""Economic-nexus evaluation as a grouped aggregate plus one projection.
 
 Re-expresses /root/reference/tax_engine/compliance.py:244-369 (check_nexus /
 check_nexus_all_states) as:
 
   transactions → groupBy(state).agg(revenue, txn_count)   [one shuffle, A3]
-  → broadcast join nexus_thresholds (J4) + literal no-nexus set (J5)
+  → nexus_thresholds lookups (J4, literal maps) + literal no-nexus set (J5)
   → status/percentage/details column expressions (F15/F16/F12)
   → sort by revenue_pct desc (O4)
 
@@ -15,11 +15,34 @@ CA/TX/NY is handled by partial (map-side) aggregation; the post-agg data is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..dims import Dims
-from ..schemas import MONEY, NO_NEXUS_STATES
+from ..dims import Dims, seed_rows
+from ..schemas import MONEY, NEXUS_THRESHOLDS_SCHEMA, NO_NEXUS_STATES
+from .tax import _map
+
+
+@functools.lru_cache(maxsize=1)
+def threshold_cols() -> dict[str, Column]:
+    """The nexus_thresholds dim keyed by the ``state`` column: one
+    ``try_element_at`` lookup into a literal map per threshold column,
+    built once from ``seed_rows`` (the ``tax._lookup_cols`` technique).
+    A state absent from the dim reads NULL in all three, exactly what the
+    left join these replace gave; so do the seed rows whose
+    ``transaction_threshold`` is NULL.  Shared by every nexus plan, batch
+    and streaming."""
+    rows = seed_rows("nexus_thresholds")
+    return {
+        f.name: F.try_element_at(
+            _map(((r["state_code"], r[f.name]) for r in rows), f.dataType),
+            F.col("state"),
+        )
+        for f in NEXUS_THRESHOLDS_SCHEMA.fields
+        if f.name != "state_code"
+    }
 
 
 def state_activity(txns: DataFrame) -> DataFrame:
@@ -78,13 +101,9 @@ def periodized_activity(txns: DataFrame, dims: Dims, as_of) -> DataFrame:
       (a state qualifies if either period crosses, so measure the max)
     - states without a threshold row: all-time up to as_of
 
-    One broadcast join + one state-keyed shuffle with conditional partial
+    One map lookup + one state-keyed shuffle with conditional partial
     aggregation — the period logic costs nothing extra at scale."""
-    nt = dims.nexus_thresholds.select(
-        F.col("state_code").alias("_pa_state"),
-        F.col("measurement_period").alias("_mp"),
-    )
-    df = txns.join(F.broadcast(nt), F.col("state") == F.col("_pa_state"), "left")
+    df = txns.withColumn("_mp", threshold_cols()["measurement_period"])
 
     preds = _period_predicates(F.col("transaction_date"), F.lit(as_of))
     in_cur, in_prior = preds["current_year"], preds["prior_year"]
@@ -148,13 +167,7 @@ def periodized_from_monthly(months: DataFrame, dims: Dims, as_of) -> DataFrame:
         raise ValueError(
             f"periodized_from_monthly needs a month-end as_of, got {as_of}"
         )
-    nt = dims.nexus_thresholds.select(
-        F.col("state_code").alias("_pa_state"),
-        F.col("measurement_period").alias("_mp"),
-    )
-    df = months.join(
-        F.broadcast(nt), F.col("state") == F.col("_pa_state"), "left"
-    )
+    df = months.withColumn("_mp", threshold_cols()["measurement_period"])
     preds = _period_predicates(F.to_date("month"), F.lit(as_of))
     in_cur, in_prior = preds["current_year"], preds["prior_year"]
     in_simple = _simple_period_col(F.col("_mp"), preds)
@@ -201,25 +214,23 @@ def check_nexus(
     Output mirrors NexusStatus (compliance.py:51-65): thresholds, percentage
     columns, nexus_types array, approaching flag, details string.
     """
-    physical = sorted({s.upper() for s in (physical_states or set())})
-
-    nt = dims.nexus_thresholds.select(
-        F.col("state_code").alias("_nt_state"),
-        "revenue_threshold",
-        "transaction_threshold",
-        "measurement_period",
-    )
-    df = (
-        activity.join(F.broadcast(nt), F.col("state") == F.col("_nt_state"), "left")
-        .drop("_nt_state")
-        # Stash the miss flag NOW: later withColumns overwrite
-        # revenue_threshold, and unresolved expressions would otherwise see
-        # the overwritten column (lazy resolution).
-        .withColumn("_no_threshold", F.col("revenue_threshold").isNull())
+    physical = tuple(sorted({s.upper() for s in (physical_states or set())}))
+    return (
+        activity.withColumns(threshold_cols())
+        .select(*_status_cols(physical))
+        .orderBy(F.desc("revenue_pct_of_threshold"), "state_code")
     )
 
+
+@functools.lru_cache(maxsize=16)
+def _status_cols(physical: tuple[str, ...]) -> tuple[Column, ...]:
+    """Memoized output columns of ``check_nexus``, keyed by the sorted
+    physical-presence states, the one parameter that enters them (the
+    ``tax._calc_cols`` rationale: the tree costs thousands of py4j round
+    trips to build).  One projection over the looked-up thresholds, so
+    every column reads the dim's own values, never an overwritten one."""
     is_no_nexus_state = F.col("state").isin(*NO_NEXUS_STATES)
-    no_threshold_data = F.col("_no_threshold")
+    no_threshold_data = F.col("revenue_threshold").isNull()
     is_physical = (
         F.col("state").isin(*physical) if physical else F.lit(False)
     )
@@ -301,48 +312,30 @@ def check_nexus(
 
     zero_money = F.lit(0).cast(MONEY)
     return (
-        df.withColumn("has_nexus", has_nexus)
-        .withColumn("nexus_types", nexus_types)
-        .withColumn(
-            "revenue_threshold",
-            F.when(special, zero_money).otherwise(F.col("revenue_threshold")),
+        F.col("state").alias("state_code"),
+        has_nexus.alias("has_nexus"),
+        nexus_types.alias("nexus_types"),
+        F.col("revenue").alias("revenue_in_state"),
+        F.col("txn_count").alias("transactions_in_state"),
+        F.when(special, zero_money)
+        .otherwise(F.col("revenue_threshold"))
+        .alias("revenue_threshold"),
+        F.when(special, F.lit(None).cast("int"))
+        .otherwise(F.col("transaction_threshold"))
+        .alias("transaction_threshold"),
+        F.when(special, F.lit(0.0))
+        .otherwise(rev_pct)
+        .alias("revenue_pct_of_threshold"),
+        F.when(special, F.lit(None).cast("double"))
+        .otherwise(txn_pct)
+        .alias("transaction_pct_of_threshold"),
+        F.when(special, F.lit(False))
+        .otherwise(
+            ((rev_pct >= 80) | F.coalesce(txn_pct >= 80, F.lit(False)))
+            & ~(is_physical | economic)
         )
-        .withColumn(
-            "transaction_threshold",
-            F.when(special, F.lit(None).cast("int")).otherwise(
-                F.col("transaction_threshold")
-            ),
-        )
-        .withColumn(
-            "revenue_pct_of_threshold",
-            F.when(special, F.lit(0.0)).otherwise(rev_pct),
-        )
-        .withColumn(
-            "transaction_pct_of_threshold",
-            F.when(special, F.lit(None).cast("double")).otherwise(txn_pct),
-        )
-        .withColumn(
-            "approaching_threshold",
-            F.when(special, F.lit(False)).otherwise(
-                ((rev_pct >= 80) | F.coalesce(txn_pct >= 80, F.lit(False)))
-                & ~(is_physical | economic)
-            ),
-        )
-        .withColumn("details", details)
-        .select(
-            F.col("state").alias("state_code"),
-            "has_nexus",
-            "nexus_types",
-            F.col("revenue").alias("revenue_in_state"),
-            F.col("txn_count").alias("transactions_in_state"),
-            "revenue_threshold",
-            "transaction_threshold",
-            "revenue_pct_of_threshold",
-            "transaction_pct_of_threshold",
-            "approaching_threshold",
-            "details",
-        )
-        .orderBy(F.desc("revenue_pct_of_threshold"), "state_code")
+        .alias("approaching_threshold"),
+        details.alias("details"),
     )
 
 

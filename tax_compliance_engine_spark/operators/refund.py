@@ -4,7 +4,7 @@ Re-expresses /root/reference/tax_engine/refund_analyzer.py (analyze_transaction
 :134-189, analyze_batch :191-252, generate_refund_claims :254-297, quick_scan
 :299-314) as DataFrame transformations layered on ``tax.calculate_tax``:
 
-  tax plan → overpayment expr + reason CASE + SOL broadcast join → filter(>0)
+  tax plan → overpayment expr + reason CASE + SOL map lookup → filter(>0)
   → aggregations (global / by state / by reason-prefix) and per-state claims.
 
 SOL arithmetic uses ``add_months`` — the reference's ``date(y±n, m, d)``
@@ -25,9 +25,21 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..dims import Dims
+from ..dims import Dims, seed_rows
 from ..schemas import DEFAULT_SOL_YEARS, MONEY, RECOVERY_RATE
 from . import tax
+
+
+@functools.lru_cache(maxsize=1)
+def _sol_years() -> Column:
+    """Statute of limitations in years per state (refund_analyzer.py:124-132):
+    a ``try_element_at`` lookup into a literal map built once from the
+    sol_years seed (the ``tax._lookup_cols`` technique), with
+    ``DEFAULT_SOL_YEARS`` for a state absent from the dim."""
+    years = tax._map((r["state_code"], r["years"]) for r in seed_rows("sol_years"))
+    return F.coalesce(
+        F.try_element_at(years, F.col("state")), F.lit(DEFAULT_SOL_YEARS)
+    )
 
 
 @functools.lru_cache(maxsize=8)
@@ -99,48 +111,37 @@ def analyze_overpayments(
     aggregations don't pay for per-row percent formatting + wide decimal
     division (~4× on the record scan); reports that show the prose keep the
     default."""
-    results = tax.calculate_tax(txns, dims)
     cols = _overpay_cols(as_of)
-
-    # Statute of limitations (refund_analyzer.py:124-132) via broadcast J7 +
-    # coalesce default.
-    sol = dims.sol_years.select(
-        F.col("state_code").alias("_sol_state"), F.col("years").alias("_sol_years")
-    )
-    enriched = (
-        results.join(F.broadcast(sol), F.col("state") == F.col("_sol_state"), "left")
-        .withColumn(
-            "sol_years", F.coalesce("_sol_years", F.lit(DEFAULT_SOL_YEARS))
-        )
-        .drop("_sol_state", "_sol_years")
-    )
-
     reason_cols = (["reason"] if include_reason else []) + ["reason_prefix"]
-    out = (
-        enriched.withColumn("overpayment", cols["overpayment"])
+    return (
+        tax.calculate_tax(txns, dims)
+        .withColumn("sol_years", _sol_years())
+        .withColumn("overpayment", cols["overpayment"])
         .filter(F.col("overpayment") > 0)
-        .withColumn("reason_prefix", cols["reason_prefix"])
-        .withColumn("refund_eligible", cols["refund_eligible"])
-        .withColumn(
-            "statute_of_limitations_date",
-            cols["statute_of_limitations_date"],
+        .withColumns(
+            {
+                c: cols[c]
+                for c in (
+                    *reason_cols,
+                    "refund_eligible",
+                    "statute_of_limitations_date",
+                )
+            }
         )
-    )
-    if include_reason:
-        out = out.withColumn("reason", cols["reason"])
-    return out.select(
-        "transaction_id",
-        "transaction_date",
-        "state",
-        "city",
-        F.col("amount").alias("sale_amount"),
-        "tax_paid",
-        F.col("tax_amount").alias("tax_owed"),
-        "overpayment",
-        *reason_cols,
-        "refund_eligible",
-        "statute_of_limitations_date",
-        "sol_years",
+        .select(
+            "transaction_id",
+            "transaction_date",
+            "state",
+            "city",
+            F.col("amount").alias("sale_amount"),
+            "tax_paid",
+            F.col("tax_amount").alias("tax_owed"),
+            "overpayment",
+            *reason_cols,
+            "refund_eligible",
+            "statute_of_limitations_date",
+            "sol_years",
+        )
     )
 
 
@@ -158,51 +159,58 @@ def refund_summary(records: DataFrame, total_transactions_reviewed: int | None =
     (refund_analyzer.py:95, 248-250).
     """
     records = records.cache()
-    summary = records.agg(
-        F.count("*").cast("long").alias("overpayment_count"),
-        F.sum("overpayment").cast(MONEY).alias("total_overpayment"),
-        F.min(F.when(F.col("refund_eligible"), F.col("transaction_date"))).alias(
-            "oldest_eligible"
-        ),
-        F.max(F.when(F.col("refund_eligible"), F.col("transaction_date"))).alias(
-            "newest_eligible"
-        ),
-        F.round(
-            F.sum(
-                F.when(F.col("refund_eligible"), F.col("overpayment")).otherwise(
-                    F.lit(0)
-                )
-            )
-            * F.lit(RECOVERY_RATE).cast("decimal(3,2)"),
-            2,
-        )
-        .cast(MONEY)
-        .alias("estimated_recovery"),
-    )
+    cols = _summary_cols()
+    summary = records.agg(*cols["summary"])
     if total_transactions_reviewed is not None:
         summary = summary.withColumn(
             "total_transactions_reviewed", F.lit(total_transactions_reviewed)
         )
-
     state_bd = (
-        records.groupBy("state")
-        .agg(F.sum("overpayment").cast(MONEY).alias("amount"))
-        .orderBy(F.desc("amount"), "state")
+        records.groupBy("state").agg(cols["amount"]).orderBy(*cols["state_order"])
     )
     reason_bd = (
         records.groupBy(reason_prefix().alias("reason"))
-        .agg(F.sum("overpayment").cast(MONEY).alias("amount"))
-        .orderBy(F.desc("amount"), "reason")
+        .agg(cols["amount"])
+        .orderBy(*cols["reason_order"])
     )
-    warnings = records.filter(~F.col("refund_eligible")).select(
-        F.format_string(
+    warnings = records.filter(cols["past_sol"]).select(cols["warning"])
+    return summary, state_bd, reason_bd, warnings
+
+
+@functools.lru_cache(maxsize=1)
+def _summary_cols() -> dict:
+    """Memoized aggregate, sort and warning trees of ``refund_summary``
+    (no parameter enters them; the ``_overpay_cols`` rationale)."""
+    eligible = F.col("refund_eligible")
+    return {
+        "summary": (
+            F.count("*").cast("long").alias("overpayment_count"),
+            F.sum("overpayment").cast(MONEY).alias("total_overpayment"),
+            F.min(F.when(eligible, F.col("transaction_date"))).alias(
+                "oldest_eligible"
+            ),
+            F.max(F.when(eligible, F.col("transaction_date"))).alias(
+                "newest_eligible"
+            ),
+            F.round(
+                F.sum(F.when(eligible, F.col("overpayment")).otherwise(F.lit(0)))
+                * F.lit(RECOVERY_RATE).cast("decimal(3,2)"),
+                2,
+            )
+            .cast(MONEY)
+            .alias("estimated_recovery"),
+        ),
+        "amount": F.sum("overpayment").cast(MONEY).alias("amount"),
+        "state_order": (F.desc("amount"), F.col("state")),
+        "reason_order": (F.desc("amount"), F.col("reason")),
+        "past_sol": ~eligible,
+        "warning": F.format_string(
             "Transaction %s in %s is past statute of limitations ($%.2f)",
             F.col("transaction_id"),
             F.col("state"),
             F.col("overpayment").cast("double"),
-        ).alias("warning")
-    )
-    return summary, state_bd, reason_bd, warnings
+        ).alias("warning"),
+    }
 
 
 _RECORD_COLS = (

@@ -21,6 +21,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..dims import local_frame
+
 # Fixed pseudo-random hyperplanes for LSH: HP[p][d] in {-1, +1}, generated by
 # a tiny LCG (seeded constants, no runtime RNG) — shared with the SQL oracle.
 N_PLANES = 16
@@ -189,7 +191,8 @@ def _lsh_sigs(
     out): ``id_col`` is the identity key and conflicting payloads
     under one key have no right answer."""
     spark = emb.sparkSession
-    planes = spark.createDataFrame(
+    planes = local_frame(
+        spark,
         [
             (p, 1 << p, [float(w) for w in plane])
             for p, plane in enumerate(hyperplanes(n_planes))
@@ -593,7 +596,8 @@ def embedding_dup_pairs_multitable(
     # table carries (table, in-table bit, plane); per-table packed sigs
     # assemble into the table-ordered array the bucket explode indexes
     spark = emb.sparkSession
-    planes = spark.createDataFrame(
+    planes = local_frame(
+        spark,
         [
             (q // n_planes, 1 << (q % n_planes), [float(w) for w in plane])
             for q, plane in enumerate(all_planes)
@@ -739,9 +743,7 @@ def dup_threshold_curve(
         emb, threshold=base, vec_col=vec_col, id_col=id_col
     )
     spark = emb.sparkSession
-    grid_df = spark.createDataFrame(
-        [(t,) for t in grid], "threshold double"
-    )
+    grid_df = local_frame(spark, [(t,) for t in grid], "threshold double")
     counts = (
         pairs.select(
             F.explode(
@@ -1121,7 +1123,8 @@ def pq_codebooks(
         r[0]
         for r in emb.select(F.col(id_col)).orderBy(id_col).limit(k).collect()
     ]
-    code_of = emb.sparkSession.createDataFrame(
+    code_of = local_frame(
+        emb.sparkSession,
         [(int(v), c) for c, v in enumerate(seed_ids)], "vec_id long, code int"
     )
     seeds = subs.join(F.broadcast(code_of), "vec_id").select(

@@ -17,12 +17,14 @@ import csv
 import datetime as dt
 import io
 import json
+from concurrent.futures import ThreadPoolExecutor
 from decimal import Decimal
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def _plain(v: Any) -> Any:
@@ -35,8 +37,28 @@ def _plain(v: Any) -> Any:
     return v
 
 
+def _dicts(rows: list[Row]) -> list[dict[str, Any]]:
+    return [{k: _plain(v) for k, v in r.asDict().items()} for r in rows]
+
+
 def _rows(df: DataFrame) -> list[dict[str, Any]]:
-    return [{k: _plain(v) for k, v in r.asDict().items()} for r in df.collect()]
+    return _dicts(df.collect())
+
+
+def _collect_all(*frames: DataFrame) -> list[list[Row]]:
+    """``collect()`` a report's independent sections concurrently, one
+    thread per frame, so their Spark jobs share the executors instead of
+    queueing behind each other's driver round trips.  Each collect runs
+    under ``inheritable_thread_target``, so it carries the caller's local
+    properties (job group, description) and job tags into its jobs; each
+    frame is wrapped on its own, so each thread gets its own copy of the
+    properties."""
+    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(df.collect))
+            for df in frames
+        ]
+        return [f.result() for f in futures]
 
 
 def _jsonable(obj: Any) -> Any:
@@ -68,7 +90,7 @@ def tax_summary_report(
 ) -> dict[str, Any]:
     """Tax liability summary (report_generator.py:73-130) from
     ``tax.batch_totals`` + ``tax.state_summary`` DataFrames."""
-    t = totals.collect()[0]
+    (t,), state_rows = _collect_all(totals, state_summary.orderBy("state"))
     overall_rate = (
         float(t.total_tax / t.total_taxable) if t.total_taxable > 0 else 0.0
     )
@@ -88,7 +110,7 @@ def tax_summary_report(
                 else 0.0
             ),
         }
-        for r in _rows(state_summary.orderBy("state"))
+        for r in _dicts(state_rows)
     ]
     return {
         "report_type": "tax_liability_summary",
@@ -229,7 +251,15 @@ def refund_report(
 ) -> dict[str, Any]:
     """Refund opportunity report (report_generator.py:245-310) from the
     ``refund.refund_summary`` / ``refund.refund_claims`` outputs."""
-    s = summary.collect()[0]
+    sections = _collect_all(
+        summary,
+        state_breakdown.orderBy(F.desc("amount"), "state"),
+        reason_breakdown.orderBy(F.desc("amount"), "reason"),
+        records,
+        warnings,
+        *([] if claims is None else [claims]),
+    )
+    (s,), states, reasons, details, warning_rows = sections[:5]
     report: dict[str, Any] = {
         "report_type": "refund_analysis",
         "generated_date": _today(generated_date),
@@ -245,12 +275,10 @@ def refund_report(
             "recovery_rate_assumed": "85%",
         },
         "state_breakdown": {
-            r["state"]: r["amount"]
-            for r in _rows(state_breakdown.orderBy(F.desc("amount"), "state"))
+            r["state"]: r["amount"] for r in _dicts(states)
         },
         "reason_breakdown": {
-            r["reason"]: r["amount"]
-            for r in _rows(reason_breakdown.orderBy(F.desc("amount"), "reason"))
+            r["reason"]: r["amount"] for r in _dicts(reasons)
         },
         "overpayment_details": [
             {
@@ -264,9 +292,9 @@ def refund_report(
                 "reason": r["reason"],
                 "eligible": r["refund_eligible"],
             }
-            for r in _rows(records)
+            for r in _dicts(details)
         ],
-        "warnings": [r["warning"] for r in _rows(warnings)],
+        "warnings": [r["warning"] for r in _dicts(warning_rows)],
     }
     if claims is not None:
         report["refund_claims"] = [
@@ -281,7 +309,7 @@ def refund_report(
                 "reasons": c["supporting_reasons"],
                 "notes": c["filing_notes"],
             }
-            for c in _rows(claims)
+            for c in _dicts(sections[5])
         ]
     return report
 

@@ -53,9 +53,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_ARROW_MAX_RECORDS_PER_BATCH", "4000"),
         )
-        # Dims are KB-sized; keep the default 10 MB broadcast threshold, but be
-        # explicit that broadcasting is expected (the refund, nexus and
-        # calendar dim joins are also marked F.broadcast).
+        # Spark's default 10 MB broadcast threshold, made explicit.  No seed
+        # dim is joined: every layer reads them as literal-map lookups.  The
+        # small frames callers bring (the calendar's filed_periods) are
+        # marked F.broadcast where they are joined.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         # Deterministic session timezone so date/timestamp semantics match the
         # DuckDB oracle regardless of host TZ.

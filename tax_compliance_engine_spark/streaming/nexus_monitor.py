@@ -8,7 +8,7 @@ run.  The streaming-native version keeps the per-state running totals as
     transactions stream
       → (optional) watermarked tumbling-window rollup   (late-data bounded)
       → running per-state totals                        (update mode)
-      → broadcast threshold join + crossing predicate
+      → threshold lookups (literal maps) + crossing predicate
       → alert rows
 
 State volume is tiny (≤51 states, or states×windows for the windowed
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dims import Dims
+from ..operators.nexus import threshold_cols
 from ..schemas import MONEY, TXN_SCHEMA
 
 
@@ -145,20 +146,12 @@ def run_periodized_monitor_once(
 
 
 def threshold_status(activity: DataFrame, dims: Dims) -> DataFrame:
-    """Join running totals to the broadcast thresholds and derive the
-    crossing/approaching flags (compliance.py:305-316 semantics).
+    """Look up each state's thresholds and derive the crossing/approaching
+    flags (compliance.py:305-316 semantics).
 
-    Works on either the running-totals or the windowed stream (the join is
-    stateless, so it composes with any upstream aggregation)."""
-    nt = dims.nexus_thresholds.select(
-        F.col("state_code").alias("_nt_state"),
-        "revenue_threshold",
-        "transaction_threshold",
-        "measurement_period",
-    )
-    df = activity.join(
-        F.broadcast(nt), F.col("state") == F.col("_nt_state"), "left"
-    ).drop("_nt_state")
+    Works on either the running-totals or the windowed stream (the lookups
+    are stateless, so they compose with any upstream aggregation)."""
+    df = activity.withColumns(threshold_cols())
     rev_hit = F.col("revenue") >= F.col("revenue_threshold")
     txn_hit = F.col("transaction_threshold").isNotNull() & (
         F.col("txn_count") >= F.col("transaction_threshold")
@@ -167,15 +160,14 @@ def threshold_status(activity: DataFrame, dims: Dims) -> DataFrame:
         F.col("revenue_threshold") > 0,
         (F.col("revenue") / F.col("revenue_threshold")).cast("double") * 100,
     ).otherwise(F.lit(0.0))
-    return (
-        df.withColumn("has_nexus", F.coalesce(rev_hit | txn_hit, F.lit(False)))
-        .withColumn("revenue_pct_of_threshold", rev_pct)
-        .withColumn(
-            "approaching_threshold",
-            F.coalesce(
+    return df.withColumns(
+        {
+            "has_nexus": F.coalesce(rev_hit | txn_hit, F.lit(False)),
+            "revenue_pct_of_threshold": rev_pct,
+            "approaching_threshold": F.coalesce(
                 (rev_pct >= 80) & ~(rev_hit | txn_hit), F.lit(False)
             ),
-        )
+        }
     )
 
 
