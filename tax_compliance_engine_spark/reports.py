@@ -413,19 +413,23 @@ def export_transaction_details(
 ) -> str:
     """S9 detail export with a size-gated sink choice.
 
-    Report-sized results (≤ ``max_driver_rows``, probed with an
-    early-terminating ``limit(cap+1).count()`` — never a full count) are
-    collected and rendered driver-side, byte-identical to the reference's
-    CSV shape, and the CSV string is returned.  Larger results take the
-    distributed path: ``df.write.csv`` with headers to
-    ``<output_dir>/<filename>.d/`` (one part file per partition, scales
-    with executors, zero driver materialization) and the returned string
-    is that directory path.  The same 10-column projection
-    (``transaction_details``) feeds both sinks."""
+    Report-sized results (≤ ``max_driver_rows``) are collected and
+    rendered driver-side, byte-identical to the reference's CSV shape, and
+    the CSV string is returned.  Larger results take the distributed path:
+    ``df.write.csv`` with headers to ``<output_dir>/<filename>.d/`` (one
+    part file per partition, scales with executors, zero driver
+    materialization) and the returned string is that directory path.  The
+    same 10-column projection (``transaction_details``) feeds both sinks.
+
+    The size probe asks whether any row lies past the cap, over no
+    columns: ``select().offset(cap).isEmpty()`` stops at the first such
+    row — never a full count.  ``limit(cap+1).count()`` would answer the
+    same, but its whole-stage-codegen limit names its counter with a
+    JVM-wide fresh id, so its generated source never repeats and every
+    call compiles new classes; this probe reuses its compiled code."""
     details = transaction_details(results)
-    probe = details.limit(max_driver_rows + 1).count()
     out = Path(output_dir)
-    if probe > max_driver_rows:
+    if not details.select().offset(max_driver_rows).isEmpty():
         target = out / f"{filename}.d"
         # Match the driver-side csv module's byte conventions so both
         # sinks emit identical rows: unquoted empty fields, and Python's

@@ -7,7 +7,9 @@ operators.  ANSI mode is left at Spark's default, which is on: overflows,
 bad casts and a missing key in ``element_at`` raise.  The permissive
 reference semantics (unknown states warn instead of raising — SURVEY §2 P4)
 are expressed in the plans instead, e.g. the tax lookups use
-``try_element_at``.
+``try_element_at``.  The generated-code cache holds the engine's whole
+working set, so a pipeline that runs the same plans again (a second close
+pass, the next quote) reuses its compiled classes instead of recompiling.
 """
 
 from __future__ import annotations
@@ -71,6 +73,19 @@ def get_spark(
         # minhash screen (55 s → 10.2 s at 10× data, whose 16-component
         # estimate + first-shared-band residual blows past 8000 bytes).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Spark's generated-code cache, sized so that each class the
+        # engine compiles is compiled once per JVM.  One close pass
+        # compiles ~134 distinct Janino classes, in the same order on
+        # every pass; the default LRU of 100 entries evicted each before
+        # its next use, so every pass recompiled 132 of them and HotSpot
+        # JIT-compiled them anew.  Measured working sets (distinct
+        # classes per fresh JVM, set-up included): a benchmark close run
+        # 146, traced 183; a quote run 12; the CLI subcommands 7-79.
+        # 1000 leaves >5x headroom.  A static conf: CodeGenerator reads
+        # it once, at the JVM's first codegen, so it must be set where
+        # the session is first built, which for the CLI, the benchmark
+        # and the test fixture is here.  clearCache() does not empty it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

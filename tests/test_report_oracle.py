@@ -1,6 +1,7 @@
-"""The ``refund_report`` and ``tax_summary_report`` dicts checked against the
-DuckDB oracle, without the reference engine: every number in the two reports
-equals the matching oracle entry over the same seeded orders table."""
+"""The report dicts (``tax_summary_report``, ``refund_report``,
+``nexus_report``, ``filing_status_report``) and the nexus alerts checked
+against the DuckDB oracle, without the reference engine: every number in a
+report equals the matching oracle entry over the same seeded orders table."""
 
 from __future__ import annotations
 
@@ -14,7 +15,9 @@ import pytest
 
 import __spark_entry__ as entry
 from tax_compliance_engine_spark import reports
-from tax_compliance_engine_spark.operators import refund, tax
+from tax_compliance_engine_spark.dims import local_frame
+from tax_compliance_engine_spark.operators import alerts, nexus, refund, tax
+from tax_compliance_engine_spark.operators import calendar as cal
 from tax_compliance_engine_spark.plans import derived, queries
 
 
@@ -144,3 +147,94 @@ def test_refund_report_matches_oracle(spark, dims, txns, oracle):
     eligible = sum(d["eligible"] for d in details)
     assert eligible == sum(w["transaction_count"] for w in claims.values())
     assert len(report["warnings"]) == len(details) - eligible
+
+
+def test_nexus_report_matches_oracle(spark, dims, txns, oracle):
+    status = nexus.check_nexus(nexus.state_activity(txns), dims)
+    report = reports.nexus_report(status)
+    want = {r["state_code"]: r for r in oracle("nexus_status")}
+
+    def bucket(w: dict) -> str:
+        if w["has_nexus"]:
+            return "nexus_established"
+        return "approaching_threshold" if w["approaching_threshold"] else "below_threshold"
+
+    got = {
+        r["state"]: section
+        for section in ("nexus_established", "approaching_threshold", "below_threshold")
+        for r in report[section]
+    }
+    assert got == {k: bucket(w) for k, w in want.items()}
+    assert {"nexus_established", "below_threshold"} <= set(got.values())
+    s = report["summary"]
+    assert s["total_states_analyzed"] == len(want)
+    assert s["states_with_nexus"] == len(report["nexus_established"])
+    assert s["states_approaching"] == len(report["approaching_threshold"])
+    assert s["states_below_threshold"] == len(report["below_threshold"])
+
+    for section in ("nexus_established", "approaching_threshold", "below_threshold"):
+        for r in report[section]:
+            w = want[r["state"]]
+            assert float(r["revenue"]) == w["revenue_in_state"], r
+            if "transactions" in r:
+                assert r["transactions"] == w["transactions_in_state"], r
+            if "revenue_pct" in r:
+                assert r["revenue_pct"] == pytest.approx(w["revenue_pct_of_threshold"]), r
+    # the report carries counts for established states only; the status
+    # rows it is built from carry them for every state
+    counts = {r.state_code: r.transactions_in_state for r in status.collect()}
+    assert counts == {k: w["transactions_in_state"] for k, w in want.items()}
+
+
+def test_nexus_alerts_match_oracle(spark, dims, txns, oracle):
+    status = nexus.check_nexus(nexus.state_activity(txns), dims)
+    rows = alerts.generate_alerts(
+        spark, dims, status, registered_states=derived.REGISTERED_STATES,
+        as_of=derived.AS_OF,
+    ).collect()
+    got = [(a.severity, a.state_code) for a in rows if a.deadline is None]
+    want = sorted(
+        (r["severity"], r["state_code"]) for r in oracle("nexus_alerts")
+    )
+    assert want
+    assert got == want  # severity-ranked (critical < warning), then by state
+
+
+def test_filing_status_report_matches_oracle(spark, dims, oracle):
+    filed = local_frame(
+        spark, derived.FILED_PERIODS,
+        "state_code string, period_start date, period_end date",
+    )
+    deadlines = cal.filing_deadlines(
+        spark, dims, derived.REGISTERED_STATES, derived.CALENDAR_YEAR,
+        derived.CAL_AS_OF, frequency="monthly", filed_periods=filed,
+    )
+    report = reports.filing_status_report(deadlines)
+
+    want = oracle("filing_calendar")
+    by_due = sorted(want, key=lambda w: (w["due_date"], w["state_code"]))
+    overdue = [w for w in by_due if w["is_overdue"]]
+    upcoming = [
+        w for w in by_due if not w["is_overdue"] and 0 <= w["days_until_due"] <= 30
+    ]
+    assert overdue and upcoming
+    assert report["summary"] == {
+        "total_filings": len(want),
+        "overdue": len(overdue),
+        "upcoming_30_days": len(upcoming),
+        "filed": sum(w["status"] == "filed" for w in want),
+    }
+
+    def expected(w: dict) -> dict:
+        return {
+            "state": w["state_code"],
+            "period": f"{w['period_start'].isoformat()} to {w['period_end'].isoformat()}",
+            "due_date": w["due_date"].isoformat(),
+            "status": w["status"],
+            "days_until_due": w["days_until_due"],
+        }
+
+    for section, rows in (("overdue_filings", overdue), ("upcoming_filings", upcoming)):
+        got = report[section]
+        assert all(float(g.pop("estimated_liability")) == 0.0 for g in got), section
+        assert got == [expected(w) for w in rows], section
