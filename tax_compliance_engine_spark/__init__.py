@@ -4,7 +4,8 @@ A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the public ``stabrea/tax-compliance-engine`` reference
 (single-threaded Python ETL), redesigned for distributed execution:
 
-- all dimension lookups become broadcast hash joins against seed dims
+- all dimension lookups become literal-map lookups (``try_element_at``)
+  built once from the seed dims, so no dim is joined
 - the per-row tax decision tree becomes one Catalyst ``CASE WHEN`` column tree
 - batch aggregations become ``groupBy().agg()`` with map-side partials
 - the filing calendar becomes a ``sequence``+``explode`` generator

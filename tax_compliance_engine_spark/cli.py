@@ -25,8 +25,8 @@ from . import reports
 from .console import ROUNDED, SIMPLE, Table, panel
 from .dims import load_dims, local_frame
 from .operators import alerts as alerts_op
-from .operators import calendar as cal
 from .operators import nexus, refund, tax
+from .rates_api import RateDatabase
 from .schemas import TXN_SCHEMA
 from .session import get_spark
 from .sources.transactions import scan_transactions_csv
@@ -152,48 +152,35 @@ def cmd_calculate(args: argparse.Namespace) -> None:
 
 
 def cmd_rates(args: argparse.Namespace) -> None:
-    spark = _spark()
-    dims = load_dims(spark)
+    # Driver-side over the seed rows: no Spark session, no job.
+    db = RateDatabase()
     if args.state:
         code = args.state.upper()
-        rows = dims.state_rates.filter(F.col("state_code") == code).collect()
-        if not rows:
+        s = db.get_state(code)
+        if s is None:
             print(f"Unknown state code: {code}", file=sys.stderr)
             sys.exit(1)
-        s = rows[0]
-        exemptions = (
-            dims.state_exemptions.filter(F.col("state_code") == code)
-            .orderBy("category")
-            .collect()
-        )
         body = (
             f"{s.state_name} ({s.state_code})\n"
-            f"Base rate: {float(s.base_rate):.2%}\n"
-            f"Avg combined rate: {float(s.avg_combined_rate):.2%}\n"
-            f"Max local rate: {float(s.max_local_rate):.2%}"
+            f"Base rate: {s.base_rate:.2%}\n"
+            f"Avg combined rate: {s.avg_combined_rate:.2%}\n"
+            f"Max local rate: {s.max_local_rate:.2%}"
         )
-        if exemptions:
-            body += "\nExemptions: " + ", ".join(
-                e.category for e in exemptions
-            )
+        if s.exemptions:
+            body += "\nExemptions: " + ", ".join(s.exemptions)
         if s.notes:
             body += f"\nNotes: {s.notes}"
         print(panel(body, title=f"{s.state_name} Tax Profile"))
-        locs = (
-            dims.local_rates.filter(F.col("state_code") == code)
-            .orderBy("jurisdiction")
-            .collect()
-        )
-        if locs:
+        if s.local_rates:
             table = Table(title="Local Rates", box=SIMPLE)
             table.add_column("Jurisdiction")
             table.add_column("Rate", justify="right")
             table.add_column("Combined", justify="right")
-            for loc in locs:
+            for loc in sorted(s.local_rates, key=lambda r: r["jurisdiction"]):
                 table.add_row(
-                    loc.jurisdiction,
-                    f"{float(loc.rate):.2%}",
-                    f"{float(s.base_rate) + float(loc.rate):.2%}",
+                    loc["jurisdiction"],
+                    f"{float(loc['rate']):.2%}",
+                    f"{s.base_rate + float(loc['rate']):.2%}",
                 )
             print(table.render())
         return
@@ -203,14 +190,12 @@ def cmd_rates(args: argparse.Namespace) -> None:
     table.add_column("Base Rate", justify="right")
     table.add_column("Avg Combined", justify="right")
     table.add_column("Local", justify="center")
-    for s in dims.state_rates.orderBy("state_code").collect():
+    for s in db.all_states():
         table.add_row(
             s.state_code,
             s.state_name,
-            f"{float(s.base_rate):.2%}" if float(s.base_rate) > 0 else "None",
-            f"{float(s.avg_combined_rate):.2%}"
-            if float(s.avg_combined_rate) > 0
-            else "-",
+            f"{s.base_rate:.2%}" if s.base_rate > 0 else "None",
+            f"{s.avg_combined_rate:.2%}" if s.avg_combined_rate > 0 else "-",
             "Y" if s.has_local_taxes else "",
         )
     print(table.render())

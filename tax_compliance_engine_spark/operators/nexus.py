@@ -337,14 +337,3 @@ def _status_cols(physical: tuple[str, ...]) -> tuple[Column, ...]:
         .alias("approaching_threshold"),
         details.alias("details"),
     )
-
-
-def nexus_buckets(status: DataFrame) -> DataFrame:
-    """P12/A9: bucket statuses into nexus / approaching / below + counts
-    (report_generator.py:140-156)."""
-    return status.withColumn(
-        "bucket",
-        F.when(F.col("has_nexus"), "nexus")
-        .when(F.col("approaching_threshold"), "approaching")
-        .otherwise("below"),
-    )

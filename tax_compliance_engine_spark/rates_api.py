@@ -1,10 +1,11 @@
 """Rate-database lookup API (reference TaxRateDatabase,
 /root/reference/tax_engine/rates.py:766-880).
 
-Driver-side convenience layer over the broadcast dims: the dim DataFrames
-are ≤ ~100 rows, so point lookups collect once into indexed dicts and serve
-from memory — the same access pattern the reference uses, without a Spark
-job per call.  Semantics parity notes:
+Driver-side lookup layer over the seed rows (``dims.seed_rows``, the same
+rows the Spark plans read): the seeds are ≤ ~100 rows, so they are indexed
+into dicts once and served from memory — the same access pattern the
+reference uses, with no Spark session and no job.  ``cli rates`` renders
+from it.  Semantics parity notes:
 
 - ``get_base_rate`` / ``get_combined_rate`` / ``is_exempt`` RAISE
   ``ValueError`` on unknown states (rates.py:804-806, 818-819, 844-845);
@@ -39,11 +40,12 @@ class StateRateProfile:
 
 
 class RateDatabase:
-    """Indexed view of the seed dims (same data the Spark plans broadcast)."""
+    """Indexed view of the seed dims (the same rows the Spark plans read)."""
 
     def __init__(self, spark: SparkSession | None = None) -> None:
-        # seeds are the single source of truth for dims.load_dims too, so
-        # API answers and plan results can never disagree
+        # ``spark`` is accepted and unused: the seeds are the single source
+        # of truth for dims.load_dims too, so API answers and plan results
+        # can never disagree
         exemptions: dict[str, list[str]] = {}
         for r in seed_rows("state_exemptions"):
             exemptions.setdefault(r["state_code"], []).append(r["category"])

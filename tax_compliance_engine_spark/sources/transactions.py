@@ -1,5 +1,5 @@
-"""Transaction sources (SURVEY §2.1 S1/S2): CSV with the reference's
-forgiving-parse contract, plus parquet for the driver testdata.
+"""Transaction source (SURVEY §2.1 S1/S2): CSV with the reference's
+forgiving-parse contract, plus the partitioned results sink.
 
 The reference (cli.py:32-67) parses the CSV row-at-a-time and *skips*
 malformed rows (missing required field, bad date, bad decimal) with a
@@ -91,17 +91,6 @@ def scan_transactions_csv(spark: SparkSession, path: str) -> CsvScan:
         )
     )
     return CsvScan(transactions=normalize_transactions(valid), rejects=rejects)
-
-
-def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Valid, normalized transactions from a CSV (rejects dropped)."""
-    return scan_transactions_csv(spark, path).transactions
-
-
-def read_transactions_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet transactions (already typed); normalization still applied so
-    the boundary semantics (upper state, blank→NULL, defaults) hold."""
-    return normalize_transactions(spark.read.parquet(path))
 
 
 def write_results_partitioned(

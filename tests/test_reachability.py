@@ -1,0 +1,110 @@
+"""Every module of the package is reached from an entry point, or is on
+the short list of modules that only their own tests import.
+
+Walks the static import graph (``ast``, no Spark) from the CLI
+(``tax_compliance_engine_spark.cli`` and ``__main__``), the query registry
+(``__spark_entry__``) and the benchmark scripts (``perfbench/*.py``).  A
+module that none of them imports serves no command, query or workload.
+The ones that exist today are listed in ``TEST_ONLY``; a new one fails
+this test, and so does a listed one that is deleted or becomes reached
+(take it off the list then).
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "tax_compliance_engine_spark"
+PERFBENCH = REPO / "perfbench"
+
+# Data-ops streaming operators and source helpers that no entry point
+# imports; only their own tests (test_streaming, test_cdc, test_webops,
+# test_ann_and_stream_dedup, test_dataops, test_plan_audit) do.
+TEST_ONLY = {
+    f"{PKG}.sources.bucketing",
+    f"{PKG}.sources.corpus_io",
+    f"{PKG}.streaming.active_users",
+    f"{PKG}.streaming.ann_stream",
+    f"{PKG}.streaming.attribution",
+    f"{PKG}.streaming.cdc_stream",
+    f"{PKG}.streaming.dedup_stream",
+    f"{PKG}.streaming.enrich_stream",
+    f"{PKG}.streaming.quality_stream",
+    f"{PKG}.streaming.quantile_stream",
+    f"{PKG}.streaming.rollup_stream",
+    f"{PKG}.streaming.search_stream",
+    f"{PKG}.streaming.sessionize",
+    f"{PKG}.streaming.trending",
+    f"{PKG}.streaming.web_stream",
+}
+
+
+def _modules() -> dict[str, Path]:
+    """Dotted name -> file for the package, the registry and perfbench
+    (perfbench scripts import each other by bare name)."""
+    mods = {}
+    for path in (REPO / PKG).rglob("*.py"):
+        parts = path.relative_to(REPO).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mods[".".join(parts)] = path
+    mods["__spark_entry__"] = REPO / "__spark_entry__.py"
+    for path in PERFBENCH.glob("*.py"):
+        mods[path.stem] = path
+    return mods
+
+
+def _imported(name: str, path: Path) -> set[str]:
+    """Names a module may import: every ``import`` target, and for
+    ``from X import a`` both X and X.a (a may be a submodule)."""
+    is_pkg = path.name == "__init__.py"
+    package = name.split(".") if is_pkg else name.split(".")[:-1]
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[: len(package) - (node.level - 1)]
+                mod = ".".join(base + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return out
+
+
+def _reached(mods: dict[str, Path], roots: list[str]) -> set[str]:
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in mods:
+            continue
+        seen.add(name)
+        # importing a.b.c runs the package __init__s of a and a.b first
+        parts = name.split(".")
+        todo.extend(".".join(parts[:i]) for i in range(1, len(parts)))
+        todo.extend(_imported(name, mods[name]))
+    return seen
+
+
+def test_every_module_is_reached_or_listed_test_only():
+    mods = _modules()
+    roots = [f"{PKG}.cli", f"{PKG}.__main__", "__spark_entry__"]
+    roots += [p.stem for p in PERFBENCH.glob("*.py")]
+    assert all(r in mods for r in roots)
+    reached = _reached(mods, roots)
+    unreached = sorted(
+        name
+        for name in mods
+        if (name == PKG or name.startswith(PKG + ".")) and name not in reached
+    )
+    assert unreached == sorted(TEST_ONLY), (
+        "unreached modules differ from TEST_ONLY: new "
+        + ", ".join(sorted(set(unreached) - TEST_ONLY))
+        + "; no longer unreached "
+        + ", ".join(sorted(TEST_ONLY - set(unreached)))
+    )
