@@ -141,12 +141,8 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata ships single parquet FILES; Spark-written
-        # fixtures (scale_curve scale-ups) are DIRECTORIES of part
-        # files — glob those so scaled dirs sweep through the same gate
-        p = f"{sf_dir}/{t}.parquet"
-        src = f"{p}/*.parquet" if Path(p).is_dir() else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+        # every fixture table is one parquet file
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     queries = dict(entry.queries())
     oracles = entry.oracle_sql()

@@ -5,9 +5,9 @@ Usage:
   python scripts/qtool.py time  <runs> <query> [query ...]      # noop-sink wall times (min + all runs)
   python scripts/qtool.py both  <out_dir> <runs> <query> ...
 
-Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and
-$SPARK_GRAFT_CPUS like bench.py.  Each query resolved the same way the
-bench resolves names: __spark_entry__.queries() first, then
+Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) for the parquet
+directory and $SPARK_GRAFT_CPUS for the session's cores.  Each query name
+resolves through __spark_entry__.queries() first, then the
 plans.queries / plans.queries_dataops module attributes.
 """
 
@@ -46,12 +46,10 @@ def main() -> None:
 
     spark = get_spark(app_name="qtool")
     if runs:
-        # bench.py's warmup discipline: run each query once at sf0.001 so
-        # JIT/codegen/broadcast-planning overhead doesn't pollute the
-        # timed sf-scale runs (cold-JVM minima are NOT comparable to the
-        # bench sidecar's numbers)
+        # run each query once on the timed directory first, so JIT and
+        # codegen warm-up stay out of the timed runs
         for name in names:
-            resolve(name)(spark, "/root/testdata/sf0.001").write.format(
+            resolve(name)(spark, sf_dir).write.format(
                 "noop"
             ).mode("overwrite").save()
         spark.catalog.clearCache()

@@ -5,7 +5,7 @@ and EXECUTION (noop write) wall time, over N repeats.
 
 Usage: python scripts/qtool_profile.py <query> [query ...] [--sf sf_dir]
                                        [--runs N]
-The split tells you WHERE a slow bench row spends its seconds: a large
+The split tells you WHERE a slow query spends its seconds: a large
 planning share is the Catalyst/driver tax (guide §7.3), a large
 execution share is executor work (guide §1.1).
 """

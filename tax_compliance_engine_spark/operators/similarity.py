@@ -249,8 +249,8 @@ def lsh_bucket_assignments(
     vectors): candidates at 10× = 47.1M / 3.79M / 0.34M and
     embedding_dup_pairs wall growth = 10.6× / 2.3× / **1.22×** for
     4- / 8- / 12-bit bands — the 12-bit plan is flat because candidate
-    work has dropped below the row-linear explode (see
-    scripts/scale_curve.py's emb_candidate_counts)."""
+    work has dropped below the row-linear explode (see BASELINE.md,
+    "Round 7: the embedding-LSH band-width knob")."""
     n_planes = n_bands * bits_per_band
     if n_planes > 63:
         raise ValueError("n_bands*bits_per_band must fit a signed long")
@@ -310,7 +310,8 @@ def lsh_geometry_for_corpus(
     Example anchors: N=32k keeps the 4×4 default feasible but picks a
     wider band; N=10⁹ forces few-band wide geometries (e.g. 2×31) —
     exactly the regime where the 4-band default's candidate count
-    explodes (measured: scripts/scale_curve.py emb_candidate_counts)."""
+    explodes (measured: BASELINE.md, "Round 7: the embedding-LSH
+    band-width knob")."""
     import math
 
     if n_docs <= 0:
@@ -1006,7 +1007,7 @@ def _sub_exploded_cols(
     """Memoized Column trees of ``_sub_exploded`` — pure functions of
     column names and the (m, subdim) geometry, rebuilt on every PQ plan
     otherwise (the tax/minhash memoization rationale; ~0.15 s per
-    build, three builds per pq_knn_fixed_queries plan)."""
+    build, three builds per pq_knn_portable plan)."""
     first = (
         F.col(id_col).alias("vec_id"),
         F.posexplode(_subvectors(_vec_d(F.col(vec_col)), m, subdim)).alias(

@@ -1253,50 +1253,6 @@ def multimodal_jpeg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pq_knn_fixed_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ search with a FIXED 10-query set (copy-0 ids only): the bench /
-    scale-curve twin of `pq_knn_portable`.  `vec_id % 50` grows the query
-    set with the corpus, which makes the ADC workload quadratic BY
-    CONSTRUCTION at a 10× scale-up; pinning the queries keeps the measured
-    curve about the plan, not the workload."""
-    pred = (F.col("vec_id") < 500) & (F.col("vec_id") % 50 == 0)
-    emb = _emb(spark, sf_dir)
-    cb = similarity.pq_codebooks(emb).cache()
-    codes = similarity.pq_codes(emb, cb)
-    return similarity.pq_knn_rerank(
-        emb, pred, cb, codes, k=5, shortlist=50
-    )
-
-
-def ivfpq_knn_fixed_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFPQ with the same fixed-query-set discipline as
-    `pq_knn_fixed_queries`; cells come from the label partition (scaled
-    embeddings keep labels, so the coarse quantizer scales with data)."""
-    pred = (F.col("vec_id") < 500) & (F.col("vec_id") % 50 == 0)
-    emb = _emb(spark, sf_dir)
-    cents = similarity.label_centroids(emb).select(
-        F.col("label").alias("cell"), "centroid"
-    )
-    assign = similarity.nearest_cell_assignments(
-        emb, cents.select(F.col("cell").alias("label"), "centroid")
-    )
-    return similarity.ivfpq_knn(
-        emb, pred, cents, assign, k=5, nprobe=2, shortlist=50
-    )
-
-
-def corpus_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination forced into the bloom-prefilter middle regime
-    (max_broadcast_grams=0) — the path a 100 TB benchmark-gram set takes,
-    which the sf0.01 driver fixture never enters on its own."""
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    rest = docs.filter(F.col("doc_id") % 97 != 0)
-    return corpus.decontaminate(
-        rest, bench, n=5, max_broadcast_grams=0
-    ).select("doc_id")
-
-
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-decode feature extraction under the bit-exact gate: the
     [w, h, mean_r, mean_g, mean_b] feature vector over deterministic

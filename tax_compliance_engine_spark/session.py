@@ -29,7 +29,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -49,12 +49,8 @@ def get_spark(
         # binary decoders (the 3 losses all sat in one contended window).
         # Smaller batches are also the memory-safe direction for the
         # multi-MB binary cells the decoders move (guide §4.2: lower the
-        # cap for large binary cells).  Env-overridable for cluster
-        # tuning where rows are narrow and numeric.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_MAX_RECORDS_PER_BATCH", "4000"),
-        )
+        # cap for large binary cells).
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4000")
         # Spark's default 10 MB broadcast threshold, made explicit.  No seed
         # dim is joined: every layer reads them as literal-map lookups.  The
         # small frames callers bring (the calendar's filed_periods) are

@@ -1,5 +1,6 @@
 """Every module of the package is reached from an entry point, or is on
-the short list of modules that only their own tests import.
+the short list of modules that only their own tests import; and every
+query builder is registered or tested.
 
 Walks the static import graph (``ast``, no Spark) from the CLI
 (``tax_compliance_engine_spark.cli`` and ``__main__``), the query registry
@@ -8,16 +9,26 @@ module that none of them imports serves no command, query or workload.
 The ones that exist today are listed in ``TEST_ONLY``; a new one fails
 this test, and so does a listed one that is deleted or becomes reached
 (take it off the list then).
+
+A public builder in ``plans/queries.py`` or ``plans/queries_dataops.py``
+must be registered in ``__spark_entry__.queries()`` or ``oracle_sql()``,
+or be named by a test; one that only a timing script calls is dead code.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "tax_compliance_engine_spark"
 PERFBENCH = REPO / "perfbench"
+TESTS = REPO / "tests"
+BUILDER_MODULES = [
+    REPO / PKG / "plans" / "queries.py",
+    REPO / PKG / "plans" / "queries_dataops.py",
+]
 
 # Data-ops streaming operators and source helpers that no entry point
 # imports; only their own tests (test_streaming, test_cdc, test_webops,
@@ -108,3 +119,34 @@ def test_every_module_is_reached_or_listed_test_only():
         + "; no longer unreached "
         + ", ".join(sorted(TEST_ONLY - set(unreached)))
     )
+
+
+def _registered() -> set[str]:
+    """Keys of the dicts that ``queries()`` and ``oracle_sql()`` return
+    (a registered key is its builder's name)."""
+    tree = ast.parse((REPO / "__spark_entry__.py").read_text())
+    return {
+        key.value
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name in {"queries", "oracle_sql"}
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Return) and isinstance(node.value, ast.Dict)
+        for key in node.value.keys
+    }
+
+
+def test_every_query_builder_is_registered_or_tested():
+    registered = _registered()
+    test_text = "\n".join(
+        p.read_text() for p in TESTS.glob("*.py") if p.name != Path(__file__).name
+    )
+    orphans = sorted(
+        f"{path.stem}.{node.name}"
+        for path in BUILDER_MODULES
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and node.name not in registered
+        and not re.search(rf"\b{node.name}\b", test_text)
+    )
+    assert orphans == [], f"builders no registry entry or test reaches: {orphans}"
