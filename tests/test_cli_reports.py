@@ -1,13 +1,25 @@
 """E2E tests: CSV source, report assembly/sinks, and CLI, cross-checked
 against the reference library run on the same sample CSV (SURVEY §5 item 3).
+
+Inputs: ``SAMPLE`` is the reference's 57-row sample CSV
+(``REFERENCE_SAMPLE``) wherever it exists, else the committed 5-row
+``tests/data/transactions_sample.csv`` (FIXTURES.md §1).
+
+The parity tests (per-row CSV parity, tax-summary and refund reports, the
+driver-side details export) run the reference library and are skipped
+where ``REFERENCE`` is absent. The sink, distributed-export, partition-pruning,
+report-file and ``python -m`` tests need only a transactions CSV and run on
+either input.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 import sys
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 
@@ -17,8 +29,20 @@ from tax_compliance_engine_spark.sources.transactions import (
     scan_transactions_csv,
 )
 
-SAMPLE = "/root/reference/data/sample_transactions.csv"
+REPO = Path(__file__).resolve().parents[1]
+REFERENCE = Path("/root/reference")
+REFERENCE_SAMPLE = REFERENCE / "data" / "sample_transactions.csv"
+SAMPLE = str(
+    REFERENCE_SAMPLE
+    if REFERENCE_SAMPLE.exists()
+    else REPO / "tests" / "data" / "transactions_sample.csv"
+)
 AS_OF = dt.date(2026, 8, 13)
+
+needs_reference = pytest.mark.skipif(
+    not REFERENCE.exists(),
+    reason="/root/reference is absent: the reference library is needed",
+)
 
 
 @pytest.fixture(scope="module")
@@ -64,6 +88,7 @@ def spark_results(spark, dims):
     return tax.calculate_tax(scan.transactions, dims).cache()
 
 
+@needs_reference
 def test_csv_source_parity_per_row(spark_results, ref_batch):
     batch, _ = ref_batch
     ours = {r.transaction_id: r for r in spark_results.collect()}
@@ -101,6 +126,7 @@ def test_csv_source_rejects_malformed(spark, tmp_path):
     ]
 
 
+@needs_reference
 def test_tax_summary_report_matches_reference(
     spark_results, ref_batch, reference
 ):
@@ -125,6 +151,7 @@ def test_tax_summary_report_matches_reference(
     ).format_text(ref_report)
 
 
+@needs_reference
 def test_refund_report_matches_reference(spark, dims, ref_batch, reference):
     _, rr = reference
     analyzer = rr.RefundAnalyzer()
@@ -195,6 +222,7 @@ def test_json_and_csv_sinks(spark_results, tmp_path):
     assert len(csv_str.strip().splitlines()) == len(report["state_breakdown"]) + 1
 
 
+@needs_reference
 def test_transaction_details_export(spark_results, tmp_path, ref_batch, reference):
     sys.path.insert(0, "/root/reference")
     from tax_engine.report_generator import ReportGenerator
@@ -299,6 +327,7 @@ def test_partitioned_sink_prunes(spark, dims, spark_results, tmp_path):
     # partition pruning: a state filter reads only that directory
     tx_only = back.filter(F.col("state") == "TX")
     plan = tx_only._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*\(state#\d+ = TX\)", plan), plan
     assert tx_only.count() == spark_results.filter(F.col("state") == "TX").count()
     assert (tmp_path / "results" / "state=TX").exists()
 
@@ -306,11 +335,21 @@ def test_partitioned_sink_prunes(spark, dims, spark_results, tmp_path):
 def test_module_entry_point_smoke():
     """`python -m tax_compliance_engine_spark` is a real installable
     entry point (same main as the pyproject console script): the
-    calculate subcommand runs end to end over the reference sample CSV
-    in a subprocess and prints the known-good batch totals."""
+    calculate subcommand runs end to end over ``SAMPLE`` in a subprocess
+    and prints the known-good batch total."""
     import subprocess
-    import sys
 
+    if SAMPLE == str(REFERENCE_SAMPLE):
+        # cross-checked against the reference library: 57 rows, total tax
+        # 4,140.38
+        expected = ("4,140.38", "4140.38")
+    else:
+        # by hand from the seed rates, each component rounded HALF_UP:
+        # TX Houston 1000 x (0.0625 + 0.02) = 62.50 + 20.00
+        # CA Los Angeles 200 x (0.0725 + 0.025) = 14.50 + 5.00
+        # TX grocery 0 (exempt), OR 0 (no sales tax)
+        # FL Miami 400 x (0.06 + 0.01) = 24.00 + 4.00  -> total 130.00
+        expected = ("Total Tax: $130.00",)
     proc = subprocess.run(
         [
             sys.executable,
@@ -318,16 +357,12 @@ def test_module_entry_point_smoke():
             "tax_compliance_engine_spark",
             "calculate",
             "--file",
-            "/root/reference/data/sample_transactions.csv",
+            SAMPLE,
         ],
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    # cross-checked against the reference library: 57 rows, total tax
-    # 4,140.38
-    assert "4,140.38" in proc.stdout or "4140.38" in proc.stdout, (
-        proc.stdout[-2000:]
-    )
+    assert any(e in proc.stdout for e in expected), proc.stdout[-2000:]
