@@ -38,45 +38,39 @@ def nexus_alerts(status: DataFrame, registered_states: list[str]) -> DataFrame:
     """Unregistered-nexus (critical) and approaching-threshold (warning)
     alerts from a nexus status DataFrame (compliance.py:521-557)."""
     registered = tuple(sorted({s.upper() for s in registered_states}))
-    critical, warning = (
-        status.filter(cond).select(*cols)
-        for cond, cols in _nexus_alert_cols(registered)
-    )
-    return critical.unionByName(warning)
+    is_alert, cols = _nexus_alert_cols(registered)
+    return status.filter(is_alert).select(*cols.values())
 
 
 @functools.lru_cache(maxsize=16)
-def _nexus_alert_cols(registered: tuple[str, ...]):
-    """Memoized (filter, alert columns) trees of the critical and warning
-    branches of ``nexus_alerts``, keyed by the sorted registered states, the
-    one parameter that enters them (the ``tax._calc_cols`` rationale)."""
+def _nexus_alert_cols(
+    registered: tuple[str, ...]
+) -> tuple[Column, dict[str, Column]]:
+    """The memoized filter and named alert columns (severity, state_code,
+    message, action_required, deadline) of ``nexus_alerts`` over a nexus
+    status frame, keyed by the sorted registered states, the one parameter
+    that enters them (the ``tax._calc_cols`` rationale).  The streaming
+    monitor reads the same trees with no registered states.
+
+    A critical alert is unregistered nexus; a warning is an approaching
+    threshold without nexus.  The two never hold together, so each column
+    picks its critical or warning value with one ``when``."""
     is_registered = (
         F.col("state_code").isin(*registered) if registered else F.lit(False)
     )
-    no_deadline = F.lit(None).cast("date").alias("deadline")
-    critical = (
-        F.col("has_nexus") & ~is_registered,
-        (
-            F.lit("critical").alias("severity"),
-            F.col("state_code"),
+    critical = F.col("has_nexus") & ~is_registered
+    warning = ~F.col("has_nexus") & F.col("approaching_threshold")
+    cols = {
+        "severity": F.when(critical, "critical").otherwise("warning"),
+        "state_code": F.col("state_code"),
+        "message": F.when(
+            critical,
             F.format_string(
                 "Economic nexus established in %s but not registered for "
                 "sales tax collection",
                 F.col("state_code"),
-            ).alias("message"),
-            F.format_string(
-                "Register for sales tax in %s immediately. Revenue: $%s",
-                F.col("state_code"),
-                F.format_number(F.col("revenue_in_state"), 2),
-            ).alias("action_required"),
-            no_deadline,
-        ),
-    )
-    warning = (
-        ~F.col("has_nexus") & F.col("approaching_threshold"),
-        (
-            F.lit("warning").alias("severity"),
-            F.col("state_code"),
+            ),
+        ).otherwise(
             # Python's {:.0f} rounds half-to-even; Java's %.0f rounds half-up.
             # bround first so exact .5 ties (e.g. 94.5%) match the reference.
             F.format_string(
@@ -84,16 +78,25 @@ def _nexus_alert_cols(registered: tuple[str, ...]):
                 "revenue limit)",
                 F.col("state_code"),
                 F.bround(F.col("revenue_pct_of_threshold"), 0).cast("long"),
-            ).alias("message"),
+            )
+        ),
+        "action_required": F.when(
+            critical,
+            F.format_string(
+                "Register for sales tax in %s immediately. Revenue: $%s",
+                F.col("state_code"),
+                F.format_number(F.col("revenue_in_state"), 2),
+            ),
+        ).otherwise(
             F.format_string(
                 "Monitor %s activity. Prepare registration materials "
                 "proactively.",
                 F.col("state_code"),
-            ).alias("action_required"),
-            no_deadline,
+            )
         ),
-    )
-    return critical, warning
+        "deadline": F.lit(None).cast("date"),
+    }
+    return critical | warning, {k: c.alias(k) for k, c in cols.items()}
 
 
 def overdue_alerts(deadlines: DataFrame, as_of: dt.date) -> DataFrame:

@@ -173,9 +173,3 @@ def overdue_filings(deadlines: DataFrame) -> DataFrame:
     """P10/O5 (compliance.py:483-497): overdue only, soonest due first."""
     return deadlines.filter(F.col("is_overdue")).orderBy("due_date", "state_code")
 
-
-def upcoming_filings(deadlines: DataFrame, window_days: int = 30) -> DataFrame:
-    """P11 (report_generator.py:198-202): due within the window, not overdue."""
-    return deadlines.filter(
-        ~F.col("is_overdue") & F.col("days_until_due").between(0, window_days)
-    ).orderBy("due_date", "state_code")

@@ -55,10 +55,8 @@ def state_activity(txns: DataFrame) -> DataFrame:
 
 def _period_predicates(d: F.Column, as_of_lit: F.Column) -> dict:
     """The five measurement-period membership predicates over a date
-    column ``d`` — shared by the transaction-level batch path
-    (``periodized_activity``) and the month-granular streaming assembly
-    (``periodized_from_monthly``), so the period semantics live in
-    exactly one place."""
+    column ``d`` at ``as_of``, as ``periodized_activity`` applies them to
+    each transaction's date."""
     return {
         "current_year": (d >= F.trunc(as_of_lit, "year")) & (d <= as_of_lit),
         "prior_year": F.year(d) == (F.year(as_of_lit) - 1),
@@ -138,88 +136,30 @@ def periodized_activity(txns: DataFrame, dims: Dims, as_of) -> DataFrame:
     )
 
 
-def periodized_from_monthly(months: DataFrame, dims: Dims, as_of) -> DataFrame:
-    """Period-aware per-state activity assembled from MONTH-GRANULAR
-    sub-aggregates — the batch half of the streaming nexus monitor:
-    the stream maintains (month, state, revenue, txn_count) running
-    state (``streaming.nexus_monitor.monthly_state_activity``, months ×
-    ≤51 states — tiny), and each snapshot assembles the five
-    measurement-period semantics from those buckets with the SAME
-    predicates the transaction-level batch path uses
-    (``_period_predicates``), applied to the bucket's month-start date.
-
-    ``as_of`` must be a month-END date (the monitor's snapshot
-    contract, asserted): every period boundary in ``_period_predicates``
-    is then month-aligned, so bucket membership ≡ row membership and —
-    Decimal/int sums being exact and order-free — the assembled totals
-    equal ``periodized_activity`` over the same transactions
-    bit-for-bit (pytest-pinned, multi-year replay).  A mid-month
-    ``as_of`` would need the current month's day-level rows, which the
-    monthly state no longer holds.
-
-    ``months``: (month date/timestamp, state, revenue, txn_count)."""
-    import datetime as _dt
-
-    if isinstance(as_of, str):
-        as_of = _dt.date.fromisoformat(as_of)
-    nxt = as_of + _dt.timedelta(days=1)
-    if nxt.day != 1:
-        raise ValueError(
-            f"periodized_from_monthly needs a month-end as_of, got {as_of}"
-        )
-    df = months.withColumn("_mp", threshold_cols()["measurement_period"])
-    preds = _period_predicates(F.to_date("month"), F.lit(as_of))
-    in_cur, in_prior = preds["current_year"], preds["prior_year"]
-    in_simple = _simple_period_col(F.col("_mp"), preds)
-
-    def _sum_if(cond) -> F.Column:
-        return F.coalesce(
-            F.sum(F.when(cond, F.col("revenue"))), F.lit(0)
-        ).cast(MONEY)
-
-    def _cnt_if(cond) -> F.Column:
-        return F.coalesce(
-            F.sum(F.when(cond, F.col("txn_count"))), F.lit(0)
-        ).cast("long")
-
-    agg = df.groupBy("state").agg(
-        _sum_if(in_simple).alias("_rev_simple"),
-        _cnt_if(in_simple).alias("_cnt_simple"),
-        _sum_if(in_cur).alias("_rev_cur"),
-        _cnt_if(in_cur).alias("_cnt_cur"),
-        _sum_if(in_prior).alias("_rev_prior"),
-        _cnt_if(in_prior).alias("_cnt_prior"),
-        F.first("_mp").alias("_mp"),
-    )
-    is_cop = F.col("_mp") == "current_or_prior"
-    return agg.select(
-        "state",
-        F.when(is_cop, F.greatest("_rev_cur", "_rev_prior"))
-        .otherwise(F.col("_rev_simple"))
-        .alias("revenue"),
-        F.when(is_cop, F.greatest("_cnt_cur", "_cnt_prior"))
-        .otherwise(F.col("_cnt_simple"))
-        .alias("txn_count"),
-    )
-
-
 def check_nexus(
     activity: DataFrame,
     dims: Dims,
     physical_states: set[str] | None = None,
 ) -> DataFrame:
     """Nexus status per state from an activity rollup with columns
-    (state, revenue, txn_count).
+    (state, revenue, txn_count), sorted by revenue percentage.
 
     Output mirrors NexusStatus (compliance.py:51-65): thresholds, percentage
     columns, nexus_types array, approaching flag, details string.
     """
-    physical = tuple(sorted({s.upper() for s in (physical_states or set())}))
-    return (
-        activity.withColumns(threshold_cols())
-        .select(*_status_cols(physical))
-        .orderBy(F.desc("revenue_pct_of_threshold"), "state_code")
+    return nexus_status(activity, physical_states).orderBy(
+        F.desc("revenue_pct_of_threshold"), "state_code"
     )
+
+
+def nexus_status(
+    activity: DataFrame, physical_states: set[str] | None = None
+) -> DataFrame:
+    """``check_nexus`` without its sort: the one nexus decision, which the
+    streaming monitor also applies to its running totals (a global sort
+    there would add a range exchange to every micro-batch)."""
+    physical = tuple(sorted({s.upper() for s in (physical_states or set())}))
+    return activity.withColumns(threshold_cols()).select(*_status_cols(physical))
 
 
 @functools.lru_cache(maxsize=16)

@@ -25,8 +25,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) a SparkSession with the engine's standard config.
+
+    ``SPARK_GRAFT_CPUS`` (default: this machine's core count) gives the
+    local core count when no ``master`` is passed and the shuffle
+    partitions when no ``shuffle_partitions`` is."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)

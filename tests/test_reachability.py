@@ -13,6 +13,10 @@ this test, and so does a listed one that is deleted or becomes reached
 A public builder in ``plans/queries.py`` or ``plans/queries_dataops.py``
 must be registered in ``__spark_entry__.queries()`` or ``oracle_sql()``,
 or be named by a test; one that only a timing script calls is dead code.
+
+A public top-level function of a core module must be named in code (a
+name or an attribute, not a string or a comment) outside ``tests/``, or
+be listed in ``UNREACHED_FUNCTIONS`` with its reason.
 """
 
 from __future__ import annotations
@@ -49,6 +53,35 @@ TEST_ONLY = {
     f"{PKG}.streaming.sessionize",
     f"{PKG}.streaming.trending",
     f"{PKG}.streaming.web_stream",
+}
+
+# The engine's tax-compliance modules, whose public functions the
+# function-level guard checks.
+CORE_MODULES = [
+    "cli",
+    "dims",
+    "rates_api",
+    "reports",
+    "session",
+    "operators/tax",
+    "operators/refund",
+    "operators/nexus",
+    "operators/alerts",
+    "operators/calendar",
+    "sources/transactions",
+    "streaming/nexus_monitor",
+]
+
+# Public core functions that no code outside tests/ names, each with why it
+# stays.
+UNREACHED_FUNCTIONS = {
+    "reports.filing_status_report": "no CLI command renders it yet; wiring "
+    "it into `compliance` or deleting it is the owner's call",
+    "sources.transactions.write_results_partitioned": "the partitioned "
+    "sink that the two pruning tests cover",
+    "operators.calendar.overdue_filings": "the paper's overdue filter (P10), "
+    "which a calendar test pins; the CLI filters overdue deadlines inside "
+    "alerts.overdue_alerts instead",
 }
 
 
@@ -150,3 +183,27 @@ def test_every_query_builder_is_registered_or_tested():
         and not re.search(rf"\b{node.name}\b", test_text)
     )
     assert orphans == [], f"builders no registry entry or test reaches: {orphans}"
+
+
+def test_every_core_function_is_named_outside_tests_or_listed():
+    named: set[str] = set()
+    for path in REPO.rglob("*.py"):
+        if path.relative_to(REPO).parts[0] == TESTS.name:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+    unreached = sorted(
+        f"{module.replace('/', '.')}.{node.name}"
+        for module in CORE_MODULES
+        for node in ast.parse((REPO / PKG / f"{module}.py").read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and node.name not in named
+    )
+    assert unreached == sorted(UNREACHED_FUNCTIONS), (
+        "public core functions named nowhere outside tests/ differ from "
+        f"UNREACHED_FUNCTIONS: {unreached}"
+    )

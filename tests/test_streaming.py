@@ -8,7 +8,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import Row
 
-from tax_compliance_engine_spark.operators import nexus
+from tax_compliance_engine_spark.operators import alerts, nexus
 from tax_compliance_engine_spark.schemas import TXN_SCHEMA
 from tax_compliance_engine_spark.streaming import nexus_monitor as nm
 
@@ -42,13 +42,34 @@ def source_dir(spark, tmp_path_factory):
     return path
 
 
-def test_streaming_monitor_end_to_end(spark, dims, source_dir, tmp_path):
-    alerts = nm.run_monitor_once(
-        spark, source_dir, dims, checkpoint_dir=str(tmp_path / "ckpt")
+def drain(spark, dims, source, checkpoint, name):
+    """Drain the monitor over every file in ``source`` the way a close pass
+    does: stream → running totals → threshold status → crossing alerts,
+    into a complete-mode memory sink with availableNow.  Returns the
+    snapshot frame and the finished query."""
+    stream = nm.stream_transactions(spark, str(source))
+    status = nm.threshold_status(nm.state_running_totals(stream), dims)
+    query = (
+        nm.crossing_alerts(status)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
     )
-    by_state = {r.state: r for r in alerts.collect()}
+    query.awaitTermination()
+    return spark.table(name), query
+
+
+def test_streaming_monitor_end_to_end(spark, dims, source_dir, tmp_path):
+    snapshot, _ = drain(spark, dims, source_dir, tmp_path / "ckpt", "nm_e2e")
+    by_state = {r.state: r for r in snapshot.collect()}
     assert by_state["CA"].severity == "critical"
-    assert "threshold reached" in by_state["CA"].message
+    assert by_state["CA"].message == (
+        "Economic nexus established in CA but not registered for sales tax "
+        "collection"
+    )
     assert by_state["TX"].severity == "warning"
     assert by_state["TX"].revenue_pct_of_threshold == pytest.approx(85.0)
     assert "OK" not in by_state
@@ -57,91 +78,60 @@ def test_streaming_monitor_end_to_end(spark, dims, source_dir, tmp_path):
 def test_streaming_incremental_state(spark, dims, tmp_path):
     """Totals accumulate across files added between triggers."""
     src = tmp_path / "src"
-    ckpt = str(tmp_path / "ckpt2")
+    ckpt = tmp_path / "ckpt2"
     spark.createDataFrame(
         [txn(1, "TX", "300000.00")], TXN_SCHEMA
     ).write.mode("append").parquet(str(src))
 
-    first = nm.run_monitor_once(spark, str(src), dims, ckpt, "nm_inc")
+    first, _ = drain(spark, dims, src, ckpt, "nm_inc")
     assert first.count() == 0  # 300k of 500k: below the 80% line
 
     spark.createDataFrame(
         [txn(2, "TX", "250000.00")], TXN_SCHEMA
     ).write.mode("append").parquet(str(src))
-    second = nm.run_monitor_once(spark, str(src), dims, ckpt, "nm_inc")
+    second, _ = drain(spark, dims, src, ckpt, "nm_inc")
     rows = second.collect()
     assert len(rows) == 1  # running total 550k → crossed, despite new-file-only batch
     assert rows[0].state == "TX" and rows[0].severity == "critical"
 
 
-def test_periodized_monitor_drained_equals_batch(spark, dims, tmp_path):
-    """Drained period-aware monitor ≡ batch `nexus_periodized` semantics
-    on a MULTI-YEAR replay (the r7 verdict task): the stream keeps
-    month×state sub-aggregates; the snapshot assembly at a month-end
-    as_of must reproduce nexus.periodized_activity → check_nexus over
-    the same transactions bit-for-bit, across every measurement_period
-    class (rolling_12 CT, rolling_4q NY, prior_year AL, current_year
-    HI, current_or_prior CA, plus no-threshold all-time fallback)."""
-    as_of = dt.date(2024, 6, 30)
-    rows, i = [], 0
-    # spread each state's activity across 30 months: Jan 2022 .. Jun 2024
-    for state in ("CT", "NY", "AL", "HI", "CA", "XX"):
-        for m in range(30):
-            d = dt.date(2022 + m // 12, m % 12 + 1, 15)
-            rows.append(txn(i, state, f"{1000 + 7 * i}.00", d))
-            i += 1
-    src = tmp_path / "periodized_src"
+def test_drained_monitor_equals_batch_nexus_alerts(spark, dims, tmp_path):
+    """The monitor applies the batch nexus decision: its drained snapshot
+    equals ``nexus_alerts(check_nexus(...), [])`` over the same rows, on
+    the edge cases of that decision.  AK (200 transactions or $100k) is
+    approaching by transactions alone (170 of 200); TX by revenue (425k of
+    500k); CA sits exactly at its $500k threshold; OR has no sales tax; ZZ
+    has no threshold row."""
+    rows = (
+        [txn(i, "AK", "10.00") for i in range(170)]
+        + [txn(200 + i, "TX", "85000.00") for i in range(5)]
+        + [txn(300 + i, "CA", "50000.00") for i in range(10)]
+        + [txn(400, "OR", "900000.00"), txn(401, "ZZ", "900000.00")]
+    )
+    src = tmp_path / "edge_src"
     spark.createDataFrame(rows, TXN_SCHEMA).write.parquet(str(src))
 
-    got = nm.run_periodized_monitor_once(
-        spark, str(src), dims, str(tmp_path / "pckpt"), as_of
+    snapshot, query = drain(spark, dims, src, tmp_path / "eckpt", "nm_edge")
+    got = sorted(
+        (r.state, r.severity, r.message, r.revenue, r.txn_count)
+        for r in snapshot.collect()
     )
+
     txns = spark.read.schema(TXN_SCHEMA).parquet(str(src))
-    want = nexus.check_nexus(
-        nexus.periodized_activity(txns, dims, as_of), dims
+    status = nexus.check_nexus(nexus.state_activity(txns), dims)
+    batch = alerts.nexus_alerts(status, []).join(status, "state_code")
+    want = sorted(
+        (r.state_code, r.severity, r.message, r.revenue_in_state,
+         r.transactions_in_state)
+        for r in batch.collect()
     )
-    g = sorted(map(tuple, got.collect()))
-    w = sorted(map(tuple, want.collect()))
-    assert g == w and len(g) == 6
-
-    # mid-month as_of violates the month-bucket contract — refused, not
-    # silently wrong
-    months = spark.createDataFrame(
-        [(dt.date(2024, 1, 1), "CA", Decimal("10.00"), 1)],
-        "month date, state string, revenue decimal(14,2), txn_count long",
-    )
-    with pytest.raises(ValueError, match="month-end"):
-        nexus.periodized_from_monthly(months, dims, dt.date(2024, 6, 15))
-
-
-def test_windowed_activity_watermark(spark, dims, tmp_path):
-    src = tmp_path / "wsrc"
-    rows = [
-        txn(1, "TX", "100.00", dt.date(2024, 1, 5)),
-        txn(2, "TX", "200.00", dt.date(2024, 1, 20)),
-        txn(3, "TX", "400.00", dt.date(2024, 3, 5)),
+    assert got == want
+    assert [(s, sev) for s, sev, *_ in got] == [
+        ("AK", "warning"), ("CA", "critical"), ("TX", "warning")
     ]
-    spark.createDataFrame(rows, TXN_SCHEMA).write.parquet(str(src))
-    stream = nm.stream_transactions(spark, str(src))
-    windowed = nm.windowed_state_activity(stream, "30 days", "7 days")
-    q = (
-        windowed.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("nm_win")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.period.start.date().isoformat(), float(r.revenue))
-        for r in spark.table("nm_win").collect()
-    }
-    # 30-day tumbling windows are epoch-aligned: Jan 5 (window ending
-    # Jan 18), Jan 20, and Mar 5 land in three distinct windows
-    revenues = sorted(v for _, v in got)
-    assert revenues == [100.0, 200.0, 400.0]
-    assert len({w for w, _ in got}) == 3
+    # the status projection adds no global sort to the micro-batch plan
+    plan = query._jsq.streamingQuery().lastExecution().optimizedPlan().toString()
+    assert "Sort" not in plan, plan
 
 
 # ── periodized nexus (batch extension) ───────────────────────────────
