@@ -9,8 +9,7 @@ computed once and both outputs derive from it (SURVEY §3 entry-point 2).
 Faithful quirk: the overdue branch generates each registered state's calendar
 for ``as_of.year`` with default (annual) frequency — exactly what the
 reference does with its default arguments (compliance.py:560-563), which
-means current-year annual returns are never overdue mid-year; callers that
-want real overdue alerts pass an explicit ``deadlines`` DataFrame.
+means current-year annual returns are never overdue mid-year.
 """
 
 from __future__ import annotations
@@ -135,14 +134,12 @@ def generate_alerts(
     status: DataFrame,
     registered_states: list[str],
     as_of: dt.date,
-    deadlines: DataFrame | None = None,
 ) -> DataFrame:
     """Full alert pipeline: nexus alerts ∪ overdue alerts, severity-sorted."""
-    if deadlines is None and registered_states:
+    parts = nexus_alerts(status, registered_states)
+    if registered_states:
         deadlines = cal.filing_deadlines(
             spark, dims, registered_states, as_of.year, as_of
         )
-    parts = nexus_alerts(status, registered_states)
-    if deadlines is not None:
         parts = parts.unionByName(overdue_alerts(deadlines, as_of))
     return parts.orderBy(severity_rank(), "state_code", "message")

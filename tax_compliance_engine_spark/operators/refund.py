@@ -11,10 +11,9 @@ SOL arithmetic uses ``add_months`` — the reference's ``date(y±n, m, d)``
 *raises* on Feb 29 of a non-leap target year (refund_analyzer.py:129-130);
 we adopt clamping (documented divergence, SURVEY §2.8 F8).
 
-Scale note: every aggregation here is a single keyed shuffle off one cached
-overpayments DataFrame; claims avoid the nested ``collect_list`` by default
-(the one skew/memory hazard at 100 TB — enable ``include_records`` only for
-report-sized outputs).
+Every aggregation here is a single keyed shuffle over the records frame,
+which callers cache when they read it more than once; claims nest the record
+structs (``collect_list``) only when asked, for report-sized outputs.
 """
 
 from __future__ import annotations
@@ -98,21 +97,18 @@ def _overpay_cols(as_of: dt.date) -> dict[str, Column]:
     }
 
 
-def analyze_overpayments(
-    txns: DataFrame, dims: Dims, as_of: dt.date, include_reason: bool = True
-) -> DataFrame:
+def analyze_overpayments(txns: DataFrame, dims: Dims, as_of: dt.date) -> DataFrame:
     """Per-transaction overpayment records (analyze_transaction,
     refund_analyzer.py:134-189).  Input must be normalized transactions with a
     ``tax_paid`` column; output keeps only rows with overpayment > 0 (P7).
 
-    ``include_reason=False`` skips the fully-formatted ``reason`` string and
-    emits only ``reason_prefix``.  The prefix (text before the first ':',
-    F11) is statically determined by the branch conditions, so downstream
-    aggregations don't pay for per-row percent formatting + wide decimal
-    division (~4× on the record scan); reports that show the prose keep the
-    default."""
+    ``reason`` is the formatted prose; ``reason_prefix`` (text before the
+    first ':', F11) is statically determined by the branch conditions and
+    is the aggregation key.  A plan that does not read ``reason`` never
+    formats it: Catalyst prunes the projection, so aggregations over the
+    prefix skip the per-row percent formatting and wide decimal division
+    (pinned by ``tests/test_refund.py``)."""
     cols = _overpay_cols(as_of)
-    reason_cols = (["reason"] if include_reason else []) + ["reason_prefix"]
     return (
         tax.calculate_tax(txns, dims)
         .withColumn("sol_years", _sol_years())
@@ -122,7 +118,8 @@ def analyze_overpayments(
             {
                 c: cols[c]
                 for c in (
-                    *reason_cols,
+                    "reason",
+                    "reason_prefix",
                     "refund_eligible",
                     "statute_of_limitations_date",
                 )
@@ -137,7 +134,8 @@ def analyze_overpayments(
             "tax_paid",
             F.col("tax_amount").alias("tax_owed"),
             "overpayment",
-            *reason_cols,
+            "reason",
+            "reason_prefix",
             "refund_eligible",
             "statute_of_limitations_date",
             "sol_years",
@@ -145,20 +143,14 @@ def analyze_overpayments(
     )
 
 
-def reason_prefix() -> F.Column:
-    """Breakdown key: text before the first ':' (refund_analyzer.py:219, 274),
-    precomputed as a static column by analyze_overpayments."""
-    return F.col("reason_prefix")
-
-
 def refund_summary(records: DataFrame, total_transactions_reviewed: int | None = None):
     """Global refund rollup (analyze_batch, refund_analyzer.py:202-251).
 
     Returns (summary_df, state_breakdown_df, reason_breakdown_df, warnings_df).
     ``estimated_recovery`` = round(eligible_overpayment * 0.85, 2)
-    (refund_analyzer.py:95, 248-250).
+    (refund_analyzer.py:95, 248-250).  The four outputs each read
+    ``records``; cache it first.
     """
-    records = records.cache()
     cols = _summary_cols()
     summary = records.agg(*cols["summary"])
     if total_transactions_reviewed is not None:
@@ -169,7 +161,7 @@ def refund_summary(records: DataFrame, total_transactions_reviewed: int | None =
         records.groupBy("state").agg(cols["amount"]).orderBy(*cols["state_order"])
     )
     reason_bd = (
-        records.groupBy(reason_prefix().alias("reason"))
+        records.groupBy(F.col("reason_prefix").alias("reason"))
         .agg(cols["amount"])
         .orderBy(*cols["reason_order"])
     )
@@ -224,74 +216,27 @@ _RECORD_COLS = (
 )
 
 
-def refund_claims(
-    records: DataFrame,
-    include_records: bool = False,
-    salt_buckets: int | None = None,
-) -> DataFrame:
+def refund_claims(records: DataFrame, include_records: bool = False) -> DataFrame:
     """Per-state refund claims over eligible records (generate_refund_claims,
     refund_analyzer.py:254-297), sorted by total requested desc (O7).
 
-    ``include_records`` nests the full record structs via collect_list — fine
-    for report-sized output, deliberately off by default at scale (SURVEY §7
-    hard-point 6).
-
-    ``salt_buckets`` enables the skew-safe two-level aggregation: stage 1
-    groups by (state, hash(transaction_id) % salt_buckets) so a hot state
-    (CA/TX at 100 TB) fans out over `salt_buckets` reducers with map-side
-    partial aggregation; stage 2 merges the ≤ 51 × salt_buckets partials on
-    the state key alone.  Results are identical to the one-level plan: sums/
-    counts/min/max merge associatively, reason sets union then sort, and
-    collect_list order was never guaranteed to begin with."""
-    eligible = records.filter(F.col("refund_eligible"))
-    if salt_buckets is None:
-        aggs = [
-            F.min("transaction_date").alias("claim_period_start"),
-            F.max("transaction_date").alias("claim_period_end"),
-            F.sum("overpayment").cast(MONEY).alias("total_refund_requested"),
-            F.count("*").cast("long").alias("transaction_count"),
-            F.sort_array(F.collect_set(reason_prefix())).alias(
-                "supporting_reasons"
-            ),
-            F.first("sol_years").alias("sol_years"),
-        ]
-        if include_records:
-            aggs.append(
-                F.collect_list(F.struct(*_RECORD_COLS)).alias("records")
-            )
-        claims = eligible.groupBy(F.col("state").alias("state_code")).agg(*aggs)
-    else:
-        salt = F.pmod(F.xxhash64("transaction_id"), F.lit(salt_buckets))
-        partial_aggs = [
-            F.min("transaction_date").alias("_start"),
-            F.max("transaction_date").alias("_end"),
-            F.sum("overpayment").cast(MONEY).alias("_total"),
-            F.count("*").cast("long").alias("_n"),
-            F.collect_set(reason_prefix()).alias("_reasons"),
-            F.first("sol_years").alias("sol_years"),
-        ]
-        if include_records:
-            partial_aggs.append(
-                F.collect_list(F.struct(*_RECORD_COLS)).alias("_records")
-            )
-        partials = eligible.groupBy(
-            F.col("state").alias("state_code"), salt.alias("_salt")
-        ).agg(*partial_aggs)
-        merge_aggs = [
-            F.min("_start").alias("claim_period_start"),
-            F.max("_end").alias("claim_period_end"),
-            F.sum("_total").cast(MONEY).alias("total_refund_requested"),
-            F.sum("_n").alias("transaction_count"),
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("_reasons")))
-            ).alias("supporting_reasons"),
-            F.first("sol_years").alias("sol_years"),
-        ]
-        if include_records:
-            merge_aggs.append(
-                F.flatten(F.collect_list("_records")).alias("records")
-            )
-        claims = partials.groupBy("state_code").agg(*merge_aggs)
+    ``include_records`` nests the full record structs via collect_list, for
+    report-sized output (SURVEY §7 hard-point 6)."""
+    aggs = [
+        F.min("transaction_date").alias("claim_period_start"),
+        F.max("transaction_date").alias("claim_period_end"),
+        F.sum("overpayment").cast(MONEY).alias("total_refund_requested"),
+        F.count("*").cast("long").alias("transaction_count"),
+        F.sort_array(F.collect_set("reason_prefix")).alias("supporting_reasons"),
+        F.first("sol_years").alias("sol_years"),
+    ]
+    if include_records:
+        aggs.append(F.collect_list(F.struct(*_RECORD_COLS)).alias("records"))
+    claims = (
+        records.filter(F.col("refund_eligible"))
+        .groupBy(F.col("state").alias("state_code"))
+        .agg(*aggs)
+    )
     return claims.withColumn(
         "filing_notes",
         F.format_string(

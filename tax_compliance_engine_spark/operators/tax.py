@@ -295,15 +295,6 @@ def batch_totals(results: DataFrame) -> DataFrame:
     )
 
 
-def state_breakdown(results: DataFrame) -> DataFrame:
-    """Per-state tax totals (calculator.py:285-288)."""
-    return (
-        results.groupBy("state")
-        .agg(F.sum("tax_amount").cast(MONEY).alias("total_tax"))
-        .orderBy("state")
-    )
-
-
 def state_summary(results: DataFrame) -> DataFrame:
     """Per-state liability summary (report_generator.py:83-108): counts,
     taxable/tax/exempt totals, effective rate with div-0 guard."""
@@ -330,15 +321,11 @@ def state_summary(results: DataFrame) -> DataFrame:
     )
 
 
-def use_tax(
-    txns: DataFrame,
-    dims: Dims,
-    tax_already_paid_col: str = "tax_paid",
-) -> DataFrame:
+def use_tax(txns: DataFrame, dims: Dims) -> DataFrame:
     """Use-tax with credit clamp (calculator.py:305-345):
-    credit = min(tax_already_paid, tax); net = round(tax - credit)."""
+    credit = min(tax_paid, tax); net = round(tax - credit)."""
     results = calculate_tax(txns, dims)
-    credit = F.least(F.col(tax_already_paid_col), F.col("tax_amount")).cast(MONEY)
+    credit = F.least(F.col("tax_paid"), F.col("tax_amount")).cast(MONEY)
     return (
         results.withColumn("credit_applied", credit)
         .withColumn("net_use_tax", _round2(F.col("tax_amount") - credit))

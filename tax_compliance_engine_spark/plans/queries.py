@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 
 from ..dims import load_dims
 from ..operators import calendar as cal
-from ..operators import nexus, refund, tax
-from ..schemas import MONEY
+from ..operators import alerts, nexus, refund, tax
 from . import derived
 
 def _utc(spark: SparkSession) -> SparkSession:
@@ -131,10 +130,8 @@ def tax_batch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _refund_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # include_reason=False: the oracle checks reason_prefix (the aggregation
-    # key); skipping the formatted prose saves the per-row percent formatting
     return refund.analyze_overpayments(
-        _txns(spark, sf_dir), load_dims(spark), derived.AS_OF, include_reason=False
+        _txns(spark, sf_dir), load_dims(spark), derived.AS_OF
     )
 
 
@@ -148,38 +145,31 @@ def refund_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         _d("tax_paid"),
         _d("tax_owed"),
         _d("overpayment"),
-        refund.reason_prefix().alias("reason_prefix"),
+        "reason_prefix",
         "refund_eligible",
         "statute_of_limitations_date",
     )
 
 
+def _quick_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return refund.quick_scan(_txns(spark, sf_dir), load_dims(spark), derived.AS_OF)
+
+
 def refund_quick_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 threshold scan: the record plan + a minimum-overpayment filter."""
-    return _refund_records(spark, sf_dir).filter(
-        F.col("overpayment") >= F.lit("1.00").cast("decimal(18,2)")
-    ).select(
-        "transaction_id",
-        "state",
-        _d("overpayment"),
-        "reason_prefix",
+    return _quick_scan(spark, sf_dir).select(
+        "transaction_id", "state", _d("overpayment"), "reason_prefix"
     )
 
 
 def refund_state_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _refund_records(spark, sf_dir)
-        .groupBy("state")
-        .agg(F.sum("overpayment").cast(MONEY).cast("double").alias("amount"))
-    )
+    _, state_bd, _, _ = refund.refund_summary(_refund_records(spark, sf_dir))
+    return state_bd.select("state", _d("amount"))
 
 
 def refund_reason_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _refund_records(spark, sf_dir)
-        .groupBy(refund.reason_prefix().alias("reason"))
-        .agg(F.sum("overpayment").cast(MONEY).cast("double").alias("amount"))
-    )
+    _, _, reason_bd, _ = refund.refund_summary(_refund_records(spark, sf_dir))
+    return reason_bd.select("reason", _d("amount"))
 
 
 def refund_breakdowns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,22 +177,20 @@ def refund_breakdowns(spark: SparkSession, sf_dir: str) -> DataFrame:
     result (driver-slot composite): per-state totals (dim='state'), per-
     reason totals (dim='reason'), and the P8 quick-scan per-state totals
     (dim='scan' — only overpayments ≥ $1.00, exercising the threshold
-    filter under the hash gate).  One record plan feeds all three arms."""
+    filter under the hash gate).  Each arm sums with
+    ``refund.refund_summary``'s breakdown aggregate and adds a row count."""
     recs = _refund_records(spark, sf_dir)
+    amount = refund._summary_cols()["amount"]
 
-    def arm(dim: str, key: F.Column, filtered: DataFrame) -> DataFrame:
-        return filtered.groupBy(key.alias("key")).agg(
-            F.count("*").alias("n_records"),
-            F.sum("overpayment").cast(MONEY).cast("double").alias("amount"),
-        ).select(F.lit(dim).alias("dim"), "key", "n_records", "amount")
+    def arm(dim: str, key: str, filtered: DataFrame) -> DataFrame:
+        return filtered.groupBy(F.col(key).alias("key")).agg(
+            F.count("*").alias("n_records"), amount
+        ).select(F.lit(dim).alias("dim"), "key", "n_records", _d("amount"))
 
-    scan = recs.filter(
-        F.col("overpayment") >= F.lit("1.00").cast("decimal(18,2)")
-    )
     return (
-        arm("state", F.col("state"), recs)
-        .unionByName(arm("reason", refund.reason_prefix(), recs))
-        .unionByName(arm("scan", F.col("state"), scan))
+        arm("state", "state", recs)
+        .unionByName(arm("reason", "reason_prefix", recs))
+        .unionByName(arm("scan", "state", _quick_scan(spark, sf_dir)))
     )
 
 
@@ -218,22 +206,13 @@ def refund_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def refund_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs = _refund_records(spark, sf_dir)
-    return (
-        recs.filter(F.col("refund_eligible"))
-        .groupBy(F.col("state").alias("state_code"))
-        .agg(
-            F.min("transaction_date").alias("claim_period_start"),
-            F.max("transaction_date").alias("claim_period_end"),
-            F.sum("overpayment")
-            .cast(MONEY)
-            .cast("double")
-            .alias("total_refund_requested"),
-            F.count("*").alias("transaction_count"),
-            F.array_join(
-                F.sort_array(F.collect_set(refund.reason_prefix())), "|"
-            ).alias("reasons_joined"),
-        )
+    return refund.refund_claims(_refund_records(spark, sf_dir)).select(
+        "state_code",
+        "claim_period_start",
+        "claim_period_end",
+        _d("total_refund_requested"),
+        "transaction_count",
+        F.array_join("supporting_reasons", "|").alias("reasons_joined"),
     )
 
 
@@ -279,27 +258,21 @@ def nexus_periodized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def nexus_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    status = _nexus_status(spark, sf_dir)
-    registered = [s.upper() for s in derived.REGISTERED_STATES]
-    critical = (
-        status.filter(F.col("has_nexus") & ~F.col("state_code").isin(*registered))
-        .select(
-            F.lit("critical").alias("severity"),
-            "state_code",
-            F.lit("unregistered_nexus").alias("alert_type"),
-            _d("revenue_in_state"),
+    """The filter and severity of ``alerts.nexus_alerts`` over the registered
+    states, with an alert type per severity."""
+    registered = tuple(sorted({s.upper() for s in derived.REGISTERED_STATES}))
+    is_alert, cols = alerts._nexus_alert_cols(registered)
+    return (
+        _nexus_status(spark, sf_dir)
+        .filter(is_alert)
+        .select(cols["severity"], "state_code", _d("revenue_in_state"))
+        .withColumn(
+            "alert_type",
+            F.when(F.col("severity") == "critical", "unregistered_nexus").otherwise(
+                "approaching_threshold"
+            ),
         )
     )
-    warning = (
-        status.filter(~F.col("has_nexus") & F.col("approaching_threshold"))
-        .select(
-            F.lit("warning").alias("severity"),
-            "state_code",
-            F.lit("approaching_threshold").alias("alert_type"),
-            _d("revenue_in_state"),
-        )
-    )
-    return critical.unionByName(warning)
 
 
 def filing_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:

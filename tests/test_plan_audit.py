@@ -343,85 +343,6 @@ def test_parquet_scans_prune_columns(plans):
     assert scan_lines and all("meta" not in ln for ln in scan_lines)
 
 
-def test_refund_claims_salted_plan_fans_hot_state(spark):
-    """The 100 TB skew gate for the tax spine's one non-combinable
-    aggregation (SURVEY §4.2: CA/TX own most rows at scale; AQE skew
-    handling covers joins/sorts, NOT groupBy, so salting is THE
-    mechanism for refund_claims' collect_list path).  Pins the salted
-    plan's shape on a 50%-one-state skewed fixture:
-
-    - stage 1 exchanges on (state_code, _salt) — the hot state fans out
-      over salt_buckets reducer keys instead of one straggler task, and
-      the collect_list/collect_set state builds inside that fanned
-      stage;
-    - stage 2 exchanges on state_code alone (≤ 51 × salt_buckets
-      partial rows — merge volume independent of data);
-    - no SinglePartition, no Python UDF.
-
-    Value parity (salted ≡ one-level, including nested records) is
-    pinned by tests/test_refund.py's two parity tests; this test is the
-    plan half the verdict asked to gate."""
-    from pyspark.sql import functions as F
-
-    from tax_compliance_engine_spark.operators import refund
-
-    n = 2000
-    records = spark.range(n).select(
-        F.concat(F.lit("T"), F.col("id")).alias("transaction_id"),
-        F.lit("2024-03-15").cast("date").alias("transaction_date"),
-        F.lit("100.00").cast("decimal(18,2)").alias("sale_amount"),
-        F.lit("9.00").cast("decimal(18,2)").alias("tax_paid"),
-        F.lit("7.00").cast("decimal(18,2)").alias("tax_owed"),
-        F.lit("2.00").cast("decimal(18,2)").alias("overpayment"),
-        F.lit("Overpayment detected: details").alias("reason"),
-        F.lit("Overpayment detected").alias("reason_prefix"),
-        # one hot state holds 50% of all rows
-        F.when(F.col("id") % 2 == 0, F.lit("CA"))
-        .otherwise(
-            F.concat(F.lit("S"), (F.col("id") % 40).cast("string"))
-        )
-        .alias("state"),
-        F.lit(True).alias("refund_eligible"),
-        F.lit(3).alias("sol_years"),
-    )
-    plan = _plan(
-        refund.refund_claims(records, include_records=True, salt_buckets=32)
-    )
-    assert "SinglePartition" not in plan
-    assert "BatchEvalPython" not in plan
-    # Catalyst inlines the `_salt` alias as `_groupingexpression` —
-    # identify the fan-out by the grouping-expression key instead
-    exchanges = [
-        ln for ln in plan.splitlines() if "hashpartitioning" in ln
-    ]
-    salted = [
-        ln
-        for ln in exchanges
-        if "_groupingexpression" in ln and "state" in ln
-    ]
-    merge = [
-        ln
-        for ln in exchanges
-        if "state_code" in ln and "_groupingexpression" not in ln
-    ]
-    assert salted, f"no salt-fanned exchange in plan:\n{plan}"
-    assert merge, f"no salt-free merge exchange in plan:\n{plan}"
-    # the non-combinable list/set state must build in the FANNED stage:
-    # an aggregate node whose Keys include the salt expression carries
-    # the partial_collect_list
-    fanned = False
-    keys_salted = False
-    for ln in plan.splitlines():
-        if ln.startswith("Keys "):
-            keys_salted = "_groupingexpression" in ln
-        elif ln.startswith("Functions ") and keys_salted:
-            if "collect_list" in ln:
-                fanned = True
-    assert fanned, (
-        "collect_list does not run under the salted grouping:\n" + plan
-    )
-
-
 def test_idn_fence_effect_is_pinned_in_optimized_plans(spark):
     """The IDN fold's one-element-shuffle NONDETERMINISM FENCE
     (webops._idn_fenced_cached) only works while Catalyst actually

@@ -14,9 +14,11 @@ A public builder in ``plans/queries.py`` or ``plans/queries_dataops.py``
 must be registered in ``__spark_entry__.queries()`` or ``oracle_sql()``,
 or be named by a test; one that only a timing script calls is dead code.
 
-A public top-level function of a core module must be named in code (a
-name or an attribute, not a string or a comment) outside ``tests/``, or
-be listed in ``UNREACHED_FUNCTIONS`` with its reason.
+A public top-level function of a core module must be referenced in code
+outside ``tests/`` through its module (``mod.fn`` with ``mod`` bound to that
+module, ``from mod import fn``, or a bare ``fn`` inside the module itself;
+not a string, a comment, or a same-named parameter elsewhere), or be listed
+in ``UNREACHED_FUNCTIONS`` with its reason.
 """
 
 from __future__ import annotations
@@ -100,21 +102,24 @@ def _modules() -> dict[str, Path]:
     return mods
 
 
+def _from_module(name: str, path: Path, node: ast.ImportFrom) -> str:
+    """The absolute module of ``from X import ...`` in module ``name``."""
+    if not node.level:
+        return node.module or ""
+    package = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+    base = package[: len(package) - (node.level - 1)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 def _imported(name: str, path: Path) -> set[str]:
     """Names a module may import: every ``import`` target, and for
     ``from X import a`` both X and X.a (a may be a submodule)."""
-    is_pkg = path.name == "__init__.py"
-    package = name.split(".") if is_pkg else name.split(".")[:-1]
     out: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text())):
         if isinstance(node, ast.Import):
             out.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = package[: len(package) - (node.level - 1)]
-                mod = ".".join(base + ([node.module] if node.module else []))
-            else:
-                mod = node.module or ""
+            mod = _from_module(name, path, node)
             out.add(mod)
             out.update(f"{mod}.{a.name}" for a in node.names)
     return out
@@ -185,25 +190,66 @@ def test_every_query_builder_is_registered_or_tested():
     assert orphans == [], f"builders no registry entry or test reaches: {orphans}"
 
 
+def _dotted(node: ast.expr) -> list[str] | None:
+    """``a.b.c`` as ["a", "b", "c"], or None for anything but a name chain."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return [node.id, *reversed(parts)]
+
+
+def _qualified_references(name: str, path: Path) -> set[str]:
+    """Dotted names that module ``name`` references through a module:
+    ``from X import a`` gives X.a; ``m.f`` with ``m`` bound by an import
+    gives the bound module's ``.f``; a bare ``f`` gives ``name.f``."""
+    tree = ast.parse(path.read_text())
+    bound: dict[str, str] = {}
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    bound[a.asname] = a.name
+                else:
+                    top = a.name.split(".")[0]
+                    bound[top] = top
+        elif isinstance(node, ast.ImportFrom):
+            mod = _from_module(name, path, node)
+            for a in node.names:
+                bound[a.asname or a.name] = f"{mod}.{a.name}"
+                out.add(f"{mod}.{a.name}")
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(f"{name}.{node.id}")
+        elif isinstance(node, ast.Attribute):
+            chain = _dotted(node)
+            if chain and chain[0] in bound:
+                out.add(".".join([bound[chain[0]], *chain[1:]]))
+    return out
+
+
 def test_every_core_function_is_named_outside_tests_or_listed():
-    named: set[str] = set()
+    referenced: set[str] = set()
     for path in REPO.rglob("*.py"):
-        if path.relative_to(REPO).parts[0] == TESTS.name:
+        rel = path.relative_to(REPO)
+        if rel.parts[0] == TESTS.name:
             continue
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name):
-                named.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                named.add(node.attr)
+        parts = rel.with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        referenced |= _qualified_references(".".join(parts), path)
     unreached = sorted(
         f"{module.replace('/', '.')}.{node.name}"
         for module in CORE_MODULES
         for node in ast.parse((REPO / PKG / f"{module}.py").read_text()).body
         if isinstance(node, ast.FunctionDef)
         and not node.name.startswith("_")
-        and node.name not in named
+        and f"{PKG}.{module.replace('/', '.')}.{node.name}" not in referenced
     )
     assert unreached == sorted(UNREACHED_FUNCTIONS), (
-        "public core functions named nowhere outside tests/ differ from "
-        f"UNREACHED_FUNCTIONS: {unreached}"
+        "public core functions referenced nowhere outside tests/ through "
+        f"their module differ from UNREACHED_FUNCTIONS: {unreached}"
     )

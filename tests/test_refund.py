@@ -157,87 +157,6 @@ def test_claims_sorted_and_notes(spark, dims):
     assert len(tx.records) == 1
 
 
-def test_claims_two_level_salted_parity(spark, dims):
-    # the skew-safe salted two-level aggregation must produce identical
-    # claims to the one-level plan (records compared order-insensitively)
-    records = analyze(
-        spark,
-        dims,
-        [
-            ("T1", D, "1000.00", "TX", "Houston", None, "100.00"),
-            ("T2", D, "500.00", "TX", "Houston", None, "60.00"),
-            ("T3", D, "250.00", "TX", None, "grocery", "20.00"),
-            ("T4", D, "500.00", "CA", "Los Angeles", None, "60.00"),
-        ],
-    )
-    def norm(rows):
-        return sorted(
-            (
-                r.state_code,
-                r.claim_period_start,
-                r.claim_period_end,
-                r.total_refund_requested,
-                r.transaction_count,
-                tuple(r.supporting_reasons),
-                r.filing_notes,
-                tuple(sorted(rec.transaction_id for rec in r.records)),
-            )
-            for r in rows
-        )
-    one = refund.refund_claims(records, include_records=True).collect()
-    two = refund.refund_claims(
-        records, include_records=True, salt_buckets=7
-    ).collect()
-    assert norm(one) == norm(two)
-
-
-def test_claims_salted_parity_under_heavy_skew(spark, dims):
-    # 100 TB regression pin for the salted path's reason to exist: one hot
-    # state holding ~90% of all records.  The two-level aggregation must
-    # still match the direct one-level plan on every claim field — sums,
-    # period extents, counts, reason sets, and the formatted notes.
-    rows = []
-    for i in range(270):  # hot key
-        rows.append(
-            (
-                f"C{i}",
-                D,
-                f"{100 + i}.00",
-                "CA",
-                "Los Angeles" if i % 2 else None,
-                None,
-                f"{50 + i}.00",
-            )
-        )
-    for i in range(25):
-        rows.append(
-            (f"T{i}", D, f"{200 + i}.00", "TX", "Houston", None, f"{90 + i}.00")
-        )
-    for i, st in enumerate(["NY", "WA", "UT", "FL", "CO"]):
-        rows.append((f"X{i}", D, "300.00", st, None, None, "80.00"))
-    records = analyze(spark, dims, rows)
-
-    def norm(claims):
-        return sorted(
-            (
-                c.state_code,
-                c.claim_period_start,
-                c.claim_period_end,
-                c.total_refund_requested,
-                c.transaction_count,
-                tuple(c.supporting_reasons),
-                c.filing_notes,
-            )
-            for c in claims
-        )
-
-    base = refund.refund_claims(records).collect()
-    salted = refund.refund_claims(records, salt_buckets=8).collect()
-    assert norm(base) == norm(salted)
-    hot = next(c for c in base if c.state_code == "CA")
-    assert hot.transaction_count == 270
-
-
 def test_quick_scan_threshold(spark, dims):
     df = make_df(
         spark,
@@ -266,3 +185,27 @@ def test_reason_prefix_matches_substring_of_reason(spark, dims):
         F.substring_index("reason", ":", 1) != F.col("reason_prefix")
     ).count()
     assert mismatches == 0
+
+
+def test_records_read_without_reason_never_format_it(spark, dims):
+    """A plan that does not read ``reason`` has no ``format_string`` in its
+    optimized plan (Catalyst prunes the prose projection); one that reads
+    the records whole keeps it.  Checked on an uncached frame, whose plan
+    is the records plan itself rather than an in-memory scan."""
+    records = analyze(
+        spark,
+        dims,
+        [
+            ("T1", D, "1000.00", "TX", "Houston", None, "100.00"),
+            ("T2", D, "500.00", "OR", None, None, "25.00"),
+        ],
+    )
+    assert not records.storageLevel.useMemory
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "format_string" in optimized(records)
+    assert "format_string" not in optimized(
+        records.select("state", "overpayment", "reason_prefix")
+    )

@@ -1,12 +1,14 @@
 """The report dicts (``tax_summary_report``, ``refund_report``,
-``nexus_report``, ``filing_status_report``) and the nexus alerts checked
-against the DuckDB oracle, without the reference engine: every number in a
-report equals the matching oracle entry over the same seeded orders table."""
+``nexus_report``, ``filing_status_report``), the nexus alerts and the
+registry's refund and nexus-alert queries checked against the DuckDB oracle,
+without the reference engine: every number in a report or query equals the
+matching oracle entry over the same seeded orders table."""
 
 from __future__ import annotations
 
 import datetime as dt
 import random
+from collections import Counter
 
 import duckdb
 import pyarrow as pa
@@ -68,6 +70,31 @@ def txns(spark, sf_dir):
     df = queries._txns(spark, str(sf_dir)).cache()
     yield df
     df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "refund_claims",
+        "refund_breakdowns",
+        "refund_summary",
+        "refund_quick_scan",
+        "refund_state_breakdown",
+        "refund_reason_breakdown",
+        "nexus_alerts",
+    ],
+)
+def test_registry_query_matches_oracle(spark, sf_dir, oracle, name):
+    """The registry builder (a projection over the operators the CLI runs)
+    returns its ``oracle_sql()`` twin's rows, as a multiset."""
+    got = getattr(queries, name)(spark, str(sf_dir)).collect()
+    want = oracle(name)
+    assert want
+
+    def bag(rows: list[dict]) -> Counter:
+        return Counter(tuple(sorted(r.items())) for r in rows)
+
+    assert bag([r.asDict() for r in got]) == bag(want)
 
 
 def test_tax_summary_report_matches_oracle(spark, dims, txns, oracle):

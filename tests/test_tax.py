@@ -223,7 +223,7 @@ def test_batch_totals_and_breakdown(spark, dims):
     assert totals.total_exempt == Decimal("150.00")
     assert totals.exempt_count == 2
 
-    bd = {r.state: r.total_tax for r in tax.state_breakdown(results).collect()}
+    bd = {r.state: r.total_tax for r in tax.state_summary(results).collect()}
     assert bd["TX"] == Decimal("41.25")
     assert bd["CA"] == Decimal("19.50")
     assert bd["OR"] == Decimal("0.00")
