@@ -146,14 +146,6 @@ def oracle_sql() -> dict[str, str]:
         "states_exempting_grocery": oracle.states_exempting_grocery_sql(),
         "pricing_summary": oracle.pricing_summary_sql(),
         "pricing_rollup": oracle.pricing_rollup_sql(),
-        # nation_pareto_cutoff: minimum customer-prefix covering 80% of
-        # a nation's revenue (integer 5·cum ≥ 4·total test) —
-        # oracle-only swept entry.
-        "nation_pareto_cutoff": oracle.nation_pareto_cutoff_sql(),
-        # pricing_cube: full CUBE over (flag, status) with grouping()
-        # flags — completes the multi-level family next to
-        # pricing_rollup — oracle-only swept entry.
-        "pricing_cube": oracle.pricing_cube_sql(),
         # nation_top_customer_list: ordered LISTAGG of each nation's
         # top-3 customers (sharded rank + pinned-order string fold) —
         # oracle-only swept entry.
@@ -175,9 +167,6 @@ def oracle_sql() -> dict[str, str]:
         "customer_order_ranks": oracle.customer_order_ranks_sql(),
         "events_sessions": oracle.events_sessions_sql(),
         "events_hourly": oracle.events_hourly_sql(),
-        # events_rolling: trailing-hour RANGE-frame window per user —
-        # oracle-only swept entry (the §2.5 rolling-window extension).
-        "events_rolling": oracle.events_rolling_sql(),
         # events_anomalies: EWMA spike detection over hourly type
         # volumes (exact-binary α, prefix folds) — oracle-only swept
         # entry.
@@ -199,10 +188,6 @@ def oracle_sql() -> dict[str, str]:
         # swept entry.
         "events_audience_overlap": oracle.events_audience_overlap_sql(),
         "events_asof_both": oracle.events_asof_both_sql(),
-        # events_value_percentiles: per-type exact p50/p90/p99 over
-        # integer cents (percentile ≡ quantile_cont interpolation) —
-        # oracle-only swept entry.
-        "events_value_percentiles": oracle.events_value_percentiles_sql(),
         # events_value_sketch: the O(k)-state MERGEABLE quantile
         # estimate next to the exact form (min-k-by-LCG-hash sample +
         # exact quantiles of the sample; deterministic, so bit-exact
@@ -217,10 +202,6 @@ def oracle_sql() -> dict[str, str]:
         # (O(k) state, mergeable; the portable approx_count_distinct)
         # — oracle-only swept entry.
         "events_reach_sketch": oracle.events_reach_sketch_sql(),
-        # events_wow_growth: Monday-aligned week-over-week growth per
-        # type (lag over the weekly series, gaps explicit) —
-        # oracle-only swept entry.
-        "events_wow_growth": oracle.events_wow_growth_sql(),
         # events_attribution_linear: trailing-hour multi-touch value
         # split at pair grain (range join + one exactly-rounded
         # cents/int division, no float sums) — oracle-only swept entry.
@@ -240,10 +221,6 @@ def oracle_sql() -> dict[str, str]:
         # vocabulary (no implicit distinct-values job) — oracle-only
         # swept entry.
         "events_pivot": oracle.events_pivot_sql(),
-        # events_unpivot: wide→long melt of the pivot matrix (row-local
-        # stack(), no added shuffle; DuckDB native UNPIVOT twin) —
-        # oracle-only swept entry.
-        "events_unpivot": oracle.events_unpivot_sql(),
         "events_asof": oracle.events_asof_sql(),
         "events_asof_next": oracle.events_asof_next_sql(),
         "events_range_pairs": oracle.events_range_pairs_sql(),
@@ -263,64 +240,6 @@ def oracle_sql() -> dict[str, str]:
         # predicate mixing both join sides, scalar revenue) —
         # oracle-only swept entry.
         "part_promo_revenue": oracle.part_promo_revenue_sql(),
-        # part_small_qty_revenue: TPC-H Q17 shape (per-part correlated
-        # average-quantity threshold, window-decorrelated) — oracle-only.
-        "part_small_qty_revenue": oracle.part_small_qty_revenue_sql(),
-        # supplier_dominant_parts: TPC-H Q20 shape (per-group correlated
-        # >50%-share threshold, then the supplier semi side) — oracle-only.
-        "supplier_dominant_parts": oracle.supplier_dominant_parts_sql(),
-        # supplier_wait_chain: TPC-H Q21 shape (EXISTS + NOT EXISTS
-        # anti-semi chain on multi-supplier orders) — oracle-only.
-        "supplier_wait_chain": oracle.supplier_wait_chain_sql(),
-        # customer_order_distribution: TPC-H Q13 shape (left-join count
-        # distribution keeping zero-order customers) — oracle-only.
-        "customer_order_distribution": (
-            oracle.customer_order_distribution_sql()
-        ),
-        # order_priority_check: TPC-H Q4 shape (EXISTS → one LEFT SEMI
-        # with a cross-side date residual) — oracle-only.
-        "order_priority_check": oracle.order_priority_check_sql(),
-        # large_volume_customers: TPC-H Q18 shape (correlated HAVING →
-        # aggregate-then-rejoin, no per-row subquery) — oracle-only.
-        "large_volume_customers": oracle.large_volume_customers_sql(),
-        # idle_rich_customers: TPC-H Q22 shape (global correlated scalar
-        # decorrelated to a broadcast 1-row agg + LEFT ANTI no-orders
-        # test) — oracle-only.
-        "idle_rich_customers": oracle.idle_rich_customers_sql(),
-        # revenue_forecast_delta: TPC-H Q6 shape (pure pushed-filter scan
-        # + one scalar aggregate, no join) — oracle-only.
-        "revenue_forecast_delta": oracle.revenue_forecast_delta_sql(),
-        # nation_trade_volume: TPC-H Q7 shape (bilateral nation pair
-        # evaluated across both broadcast dims, per-year volume) —
-        # oracle-only.
-        "nation_trade_volume": oracle.nation_trade_volume_sql(),
-        # nation_market_share: TPC-H Q8 shape (conditional-sum/total-sum
-        # market-share ratio, numerator condition on a different
-        # dimension than the scope filters) — oracle-only.
-        "nation_market_share": oracle.nation_market_share_sql(),
-        # returned_item_losses: TPC-H Q10 shape (returned-revenue top-20
-        # customers; TakeOrderedAndProject) — oracle-only.
-        "returned_item_losses": oracle.returned_item_losses_sql(),
-        # important_part_stock: TPC-H Q11 shape (per-group value vs a
-        # global-scalar fraction HAVING, separate-lineage decorrelation)
-        # — oracle-only.
-        "important_part_stock": oracle.important_part_stock_sql(),
-        # shipping_delay_priority: TPC-H Q12 shape (derived-bucket
-        # crosstab with two conditional counts) — oracle-only.
-        "shipping_delay_priority": oracle.shipping_delay_priority_sql(),
-        # promo_revenue_share: TPC-H Q14 shape (conditional/total revenue
-        # percentage, one scalar row) — oracle-only.
-        "promo_revenue_share": oracle.promo_revenue_share_sql(),
-        # top_revenue_supplier: TPC-H Q15 shape (view-then-max equality
-        # with ties, DECIMAL-exact compare) — oracle-only.
-        "top_revenue_supplier": oracle.top_revenue_supplier_sql(),
-        # part_min_cost_supplier: TPC-H Q2 shape (per-part correlated min
-        # unit cost, window-decorrelated, min-suppkey tiebreak) —
-        # oracle-only.
-        "part_min_cost_supplier": oracle.part_min_cost_supplier_sql(),
-        # part_supplier_variety: TPC-H Q16 shape (NOT IN exclusion +
-        # COUNT DISTINCT per part class) — oracle-only.
-        "part_supplier_variety": oracle.part_supplier_variety_sql(),
         "doc_profile": oracle_dataops.doc_profile_sql(),
         "doc_signals": oracle_dataops.doc_signals_sql(),
         "doc_text_stats": oracle_dataops.doc_text_stats_sql(),

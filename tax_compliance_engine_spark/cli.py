@@ -53,6 +53,9 @@ def _load(spark: SparkSession, path: str):
 
 
 def cmd_calculate(args: argparse.Namespace) -> None:
+    if not args.file and not (args.amount and args.state):
+        print("Provide --amount and --state, or --file", file=sys.stderr)
+        sys.exit(1)
     spark = _spark()
     dims = load_dims(spark)
 
@@ -110,10 +113,6 @@ def cmd_calculate(args: argparse.Namespace) -> None:
             )
             print(f"JSON exported to {args.export_json}")
         return
-
-    if not args.amount or not args.state:
-        print("Provide --amount and --state, or --file", file=sys.stderr)
-        sys.exit(1)
 
     txn = dict(  # TXN_SCHEMA field order
         transaction_id="cli-calc",
@@ -202,11 +201,11 @@ def cmd_rates(args: argparse.Namespace) -> None:
 
 
 def cmd_compliance(args: argparse.Namespace) -> None:
-    spark = _spark()
-    dims = load_dims(spark)
     if not args.file:
         print("Provide --file", file=sys.stderr)
         sys.exit(1)
+    spark = _spark()
+    dims = load_dims(spark)
     registered = (
         [s.strip().upper() for s in args.registered.split(",") if s.strip()]
         if args.registered
@@ -333,9 +332,11 @@ def cmd_report(args: argparse.Namespace) -> None:
     spark = _spark()
     dims = load_dims(spark)
     txns = _load(spark, args.file).cache()
+    # the count fills the txns cache before the concurrent report collects
+    n_reviewed = txns.count()
     as_of = dt.date.today()
 
-    results = tax.calculate_tax(txns, dims).cache()
+    results = tax.calculate_tax(txns, dims)
     tax_report = reports.tax_summary_report(
         tax.batch_totals(results),
         tax.state_summary(results),
@@ -345,7 +346,7 @@ def cmd_report(args: argparse.Namespace) -> None:
 
     records = refund.analyze_overpayments(txns, dims, as_of).cache()
     summary, state_bd, reason_bd, warnings = refund.refund_summary(
-        records, total_transactions_reviewed=txns.count()
+        records, total_transactions_reviewed=n_reviewed
     )
     claims = refund.refund_claims(records)
     ref_report = reports.refund_report(

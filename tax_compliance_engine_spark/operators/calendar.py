@@ -85,36 +85,27 @@ def _period_cols() -> dict[str, Column]:
 def filing_deadlines(
     spark: SparkSession,
     dims: Dims,
-    states: list[str] | DataFrame,
+    states: list[str],
     year: int,
     as_of: dt.date,
     frequency: str | None = None,
     estimated_annual_liability: str | float = 0,
     filed_periods: DataFrame | None = None,
 ) -> DataFrame:
-    """Generate the filing calendar for the given states and year.
+    """Generate the filing calendar for the given state codes and year.
 
-    ``states`` is a list of codes or a DataFrame with columns
-    (state_code [, estimated_annual_liability] [, frequency]).  Frequency is
-    auto-determined from liability when not supplied (F14).
+    Frequency is auto-determined from liability when not supplied (F14).
     """
-    if isinstance(states, list):
-        base = local_frame(
-            spark, [(s.upper(),) for s in states], "state_code string"
-        ).withColumn(
-            "estimated_annual_liability",
-            F.lit(str(estimated_annual_liability)).cast("decimal(18,2)"),
-        )
-    else:
-        base = states
-        if "estimated_annual_liability" not in base.columns:
-            base = base.withColumn(
-                "estimated_annual_liability", F.lit(0).cast("decimal(18,2)")
-            )
+    base = local_frame(
+        spark, [(s.upper(),) for s in states], "state_code string"
+    ).withColumn(
+        "estimated_annual_liability",
+        F.lit(str(estimated_annual_liability)).cast("decimal(18,2)"),
+    )
 
     if frequency is not None:
         base = base.withColumn("frequency", F.lit(frequency))
-    elif "frequency" not in base.columns:
+    else:
         base = base.withColumn(
             "frequency", determine_frequency_col(F.col("estimated_annual_liability"))
         )

@@ -140,9 +140,9 @@ def grouped_quantile_sketch(
     Determinism: the hash is a pure function of ``id_col`` (unique ids
     required, as everywhere in the sampling family), the cut uses
     (hash, id) total order, and the quantile interpolation is Spark
-    ``percentile`` ≡ DuckDB ``quantile_cont`` (the
-    events_value_percentiles precedent) — so the estimate is one
-    reproducible number, not a run-dependent one.
+    ``percentile`` ≡ DuckDB ``quantile_cont`` (linear interpolation in
+    both engines) — so the estimate is one reproducible number, not a
+    run-dependent one.
 
     Output: ``group_cols`` + ``sample_n`` (≤k) + one double column per
     ``quantiles`` entry (name → fraction)."""

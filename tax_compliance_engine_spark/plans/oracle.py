@@ -755,18 +755,6 @@ FROM events
 GROUP BY 1, 2"""
 
 
-def events_rolling_sql() -> str:
-    # trailing-hour RANGE frame over integer epoch seconds; DECIMAL sum
-    # then one cast to double keeps the float bit-exact across engines
-    return """SELECT event_id, user_id,
-  epoch_ns(ts) // 1000000000 AS ts_sec,
-  count(*) OVER w AS n_1h,
-  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS value_1h
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000000
-             RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)"""
-
-
 def pricing_rollup_sql() -> str:
     return """SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -914,360 +902,6 @@ WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
        AND l.l_quantity BETWEEN 1 AND 25)
    OR (p.p_brand = 'Brand#11' AND p.p_size BETWEEN 10 AND 30
        AND l.l_quantity BETWEEN 10 AND 40)"""
-
-
-def part_small_qty_revenue_sql() -> str:
-    """Twin of queries.part_small_qty_revenue: same brand prune, same
-    window-decorrelated per-part average (integral-double quantity sums
-    are exact at any order, so avg is one deterministic division), same
-    DECIMAL revenue sum → double → /7."""
-    return """WITH pruned AS (
-  SELECT l.l_partkey, l.l_quantity, l.l_extendedprice, p.p_brand
-  FROM lineitem l
-  JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE p.p_brand IN ('Brand#1', 'Brand#11', 'Brand#21')),
-flagged AS (
-  SELECT p_brand, l_extendedprice,
-         l_quantity < CAST(0.2 AS DOUBLE)
-                      * avg(l_quantity) OVER (PARTITION BY l_partkey)
-           AS small
-  FROM pruned)
-SELECT p_brand,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         / CAST(7.0 AS DOUBLE) AS avg_yearly,
-       count(*) AS n_items
-FROM flagged WHERE small
-GROUP BY p_brand
-ORDER BY p_brand"""
-
-
-def supplier_dominant_parts_sql() -> str:
-    """Twin of queries.supplier_dominant_parts: (supp, part) quantity
-    cells, window total per part, >50% share filter, name joins."""
-    return """WITH cells AS (
-  SELECT l.l_suppkey, l.l_partkey, SUM(l.l_quantity) AS qty
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  WHERE year(o.o_orderdate) = 1997
-  GROUP BY l.l_suppkey, l.l_partkey),
-dominant AS (
-  SELECT l_suppkey FROM (
-    SELECT l_suppkey, qty,
-           SUM(qty) OVER (PARTITION BY l_partkey) AS total
-    FROM cells) t
-  WHERE qty > CAST(0.5 AS DOUBLE) * total)
-SELECT s.s_name, n.n_name AS nation, counts.n_parts
-FROM (SELECT l_suppkey, count(*) AS n_parts FROM dominant GROUP BY 1) counts
-JOIN supplier s ON counts.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-ORDER BY s.s_name"""
-
-
-def supplier_wait_chain_sql() -> str:
-    """Twin of queries.supplier_wait_chain: the literal EXISTS +
-    NOT EXISTS formulation DuckDB decorrelates itself — the fixed point
-    is formulation-independent (pure integers and timestamps)."""
-    return """WITH base AS (
-  SELECT l.l_orderkey, l.l_suppkey,
-         l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY AS late
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  WHERE o.o_orderstatus = 'F'),
-l1 AS (SELECT l_orderkey, l_suppkey FROM base WHERE late)
-SELECT s.s_name, count(*) AS numwait
-FROM l1
-JOIN supplier s ON l1.l_suppkey = s.s_suppkey
-WHERE EXISTS (
-    SELECT 1 FROM base b2
-    WHERE b2.l_orderkey = l1.l_orderkey
-      AND b2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (
-    SELECT 1 FROM base b3
-    WHERE b3.l_orderkey = l1.l_orderkey
-      AND b3.l_suppkey <> l1.l_suppkey AND b3.late)
-GROUP BY s.s_name
-ORDER BY numwait DESC, s.s_name"""
-
-
-def order_priority_check_sql() -> str:
-    """Twin of queries.order_priority_check: the literal EXISTS form of
-    the late-lineitem semi-join."""
-    return """SELECT o.o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1997-07-01 00:00:00'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey
-      AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-GROUP BY o.o_orderpriority
-ORDER BY o.o_orderpriority"""
-
-
-def large_volume_customers_sql(threshold: float = 230.0) -> str:
-    """Twin of queries.large_volume_customers: correlated HAVING as the
-    literal IN-subquery; integral-double quantity sums are exact at any
-    order."""
-    return f"""WITH big AS (
-  SELECT l_orderkey, SUM(l_quantity) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING SUM(l_quantity) > CAST({threshold!r} AS DOUBLE))
-SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-       o.o_totalprice, b.total_qty
-FROM big b
-JOIN orders o ON b.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-ORDER BY b.total_qty DESC, o.o_orderkey"""
-
-
-def idle_rich_customers_sql() -> str:
-    """Twin of queries.idle_rich_customers: the same decorrelated global
-    scalar (DECIMAL-exact positive-balance sum, ONE double division)
-    compared per customer, NOT EXISTS for the 1998-order test."""
-    return """WITH avg_bal AS (
-  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-           / CAST(count(*) AS DOUBLE) AS a
-  FROM customer WHERE c_acctbal > CAST(0.0 AS DOUBLE))
-SELECT n.n_name AS nation, count(*) AS numcust,
-       CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-         AS totacctbal
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey, avg_bal
-WHERE CAST(c.c_acctbal AS DOUBLE) > avg_bal.a
-  AND NOT EXISTS (
-    SELECT 1 FROM orders o
-    WHERE o.o_custkey = c.c_custkey AND year(o.o_orderdate) = 1998)
-GROUP BY n.n_name
-ORDER BY nation"""
-
-
-def customer_order_distribution_sql() -> str:
-    """Twin of queries.customer_order_distribution: left join keeps
-    zero-order customers; count(o_orderkey) skips the nulls."""
-    return """WITH per_cust AS (
-  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-                    AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey)
-SELECT c_count, count(*) AS custdist
-FROM per_cust
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC"""
-
-
-def revenue_forecast_delta_sql() -> str:
-    """Twin of queries.revenue_forecast_delta: same three pushed range
-    predicates, DECIMAL price×discount sum, double at the edge."""
-    return """SELECT
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE)
-         AS revenue_delta,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l_discount BETWEEN CAST(0.03 AS DOUBLE) AND CAST(0.05 AS DOUBLE)
-  AND l_quantity < 24"""
-
-
-def nation_trade_volume_sql() -> str:
-    """Twin of queries.nation_trade_volume: both directions of the
-    NATION_1 ↔ NATION_2 pair, 1996-1997 ship years, DECIMAL revenue."""
-    return """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l.l_shipdate) AS l_year,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE n1.n_name IN ('NATION_1', 'NATION_2')
-  AND n2.n_name IN ('NATION_1', 'NATION_2')
-  AND n1.n_name <> n2.n_name
-  AND year(l.l_shipdate) IN (1996, 1997)
-GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-ORDER BY supp_nation, cust_nation, l_year"""
-
-
-def nation_market_share_sql() -> str:
-    """Twin of queries.nation_market_share: conditional DECIMAL sum over
-    total DECIMAL sum, each cast to double once, ONE IEEE division per
-    year (NULL share where the nation sold nothing, matching Spark's
-    null-skipping conditional sum)."""
-    return """SELECT year(o.o_orderdate) AS o_year,
-       CAST(SUM(CASE WHEN n1.n_name = 'NATION_3' THEN
-                CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2)))
-           END) AS DOUBLE)
-         / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS mkt_share,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS total_revenue
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-JOIN region r ON n2.n_regionkey = r.r_regionkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-WHERE p.p_type = 'STANDARD' AND r.r_name = 'EUROPE'
-GROUP BY year(o.o_orderdate)
-ORDER BY o_year"""
-
-
-def returned_item_losses_sql() -> str:
-    """Twin of queries.returned_item_losses: returned-flag filter,
-    1997-Q1 order window, (revenue DESC, custkey) top-20."""
-    return """SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name AS nation,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
-GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-ORDER BY revenue DESC, c.c_custkey
-LIMIT 20"""
-
-
-def important_part_stock_sql() -> str:
-    """Twin of queries.important_part_stock: per-part DECIMAL value vs
-    0.1% of the global NATION_0 total — the compare runs in double (one
-    rounded multiply per side), the values stay DECIMAL until the
-    edge."""
-    return """WITH n0 AS (
-  SELECT l.l_partkey, CAST(l.l_extendedprice AS DECIMAL(18,2)) AS price
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  WHERE n.n_name = 'NATION_0'),
-per_part AS (
-  SELECT l_partkey, SUM(price) AS value FROM n0 GROUP BY l_partkey),
-total AS (SELECT CAST(SUM(price) AS DOUBLE) AS t FROM n0)
-SELECT p.l_partkey AS p_partkey,
-       CAST(p.value AS DOUBLE) AS stock_value
-FROM per_part p, total
-WHERE CAST(p.value AS DOUBLE) > CAST(0.001 AS DOUBLE) * total.t
-ORDER BY stock_value DESC, p_partkey"""
-
-
-def shipping_delay_priority_sql() -> str:
-    """Twin of queries.shipping_delay_priority: same delay buckets
-    (datediff('day', orderdate, shipdate) — all values are midnight
-    UTC, so boundary counting equals Spark's date subtraction), same
-    two conditional counts."""
-    return """SELECT CASE WHEN datediff('day', o.o_orderdate, l.l_shipdate) < 30
-            THEN 'FAST'
-            WHEN datediff('day', o.o_orderdate, l.l_shipdate) < 90
-            THEN 'NORMAL' ELSE 'SLOW' END AS delay_bucket,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE year(l.l_shipdate) = 1997
-GROUP BY 1
-ORDER BY delay_bucket"""
-
-
-def promo_revenue_share_sql() -> str:
-    """Twin of queries.promo_revenue_share: conditional and total DECIMAL
-    sums each cast to double once, then 100·promo/total — two
-    exactly-rounded IEEE ops."""
-    return """SELECT
-       CAST(100.0 AS DOUBLE)
-         * CAST(SUM(CASE WHEN p.p_type = 'PROMO' THEN
-                  CAST(l.l_extendedprice AS DECIMAL(18,2))
-                  * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2)))
-             END) AS DOUBLE)
-         / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                  * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-              AS DOUBLE) AS promo_pct,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-            AS DOUBLE) AS total_revenue
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1997-10-01 00:00:00'"""
-
-
-def top_revenue_supplier_sql() -> str:
-    """Twin of queries.top_revenue_supplier: the view-then-max-equality
-    shape; the compare runs in DECIMAL (exact), ties kept."""
-    return """WITH rev AS (
-  SELECT l_suppkey,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-           AS r
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-  GROUP BY l_suppkey)
-SELECT s.s_suppkey, s.s_name, CAST(rev.r AS DOUBLE) AS total_revenue
-FROM rev
-JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-WHERE rev.r = (SELECT max(r) FROM rev)
-ORDER BY s.s_suppkey"""
-
-
-def part_min_cost_supplier_sql() -> str:
-    """Twin of queries.part_min_cost_supplier: same window-decorrelated
-    per-part min unit price (ONE IEEE division of parquet doubles per
-    row, identical on both engines), min-suppkey tiebreak resolved by a
-    scalar min + name join-back (suppkey → name is functional)."""
-    return """WITH pruned AS (
-  SELECT p.p_partkey, p.p_brand, l.l_suppkey,
-         l.l_extendedprice / l.l_quantity AS unit
-  FROM lineitem l
-  JOIN part p ON l.l_partkey = p.p_partkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE p.p_type = 'STANDARD' AND p.p_size BETWEEN 10 AND 20
-    AND r.r_name = 'EUROPE'),
-flagged AS (
-  SELECT p_partkey, p_brand, l_suppkey, unit,
-         min(unit) OVER (PARTITION BY p_partkey) AS m
-  FROM pruned),
-winners AS (
-  SELECT p_partkey, p_brand, m AS unit_cost, min(l_suppkey) AS sk
-  FROM flagged WHERE unit = m
-  GROUP BY p_partkey, p_brand, m)
-SELECT w.p_partkey, w.p_brand, s.s_name, n.n_name AS nation, w.unit_cost
-FROM winners w
-JOIN supplier s ON w.sk = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-ORDER BY unit_cost DESC, p_partkey
-LIMIT 100"""
-
-
-def part_supplier_variety_sql() -> str:
-    """Twin of queries.part_supplier_variety: same part prune, NOT IN
-    negative-balance exclusion, COUNT(DISTINCT) per (brand, type,
-    size)."""
-    return """SELECT p.p_brand, p.p_type, p.p_size,
-       count(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE p.p_brand <> 'Brand#2'
-  AND p.p_size IN (1, 5, 10, 15, 20, 25)
-  AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p.p_brand, p.p_type, p.p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
 
 
 def customers_without_orders_sql() -> str:
@@ -1584,52 +1218,6 @@ GROUP BY 1
 ORDER BY hour_sec"""
 
 
-def events_unpivot_sql() -> str:
-    """Twin of queries.events_unpivot: DuckDB's native UNPIVOT over the
-    same FILTER-aggregate crosstab, column names mapped back to the
-    type vocabulary, zero cells dropped."""
-    return f"""
-WITH wide AS (
-{events_pivot_sql()}
-),
-melted AS (
-  SELECT hour_sec, t, n
-  FROM (UNPIVOT wide ON n_click, n_error, n_purchase, n_signup, n_view
-        INTO NAME t VALUE n))
-SELECT hour_sec, substr(t, 3) AS event_type, n
-FROM melted WHERE n > 0
-ORDER BY hour_sec, event_type"""
-
-
-def events_wow_growth_sql() -> str:
-    """Twin of queries.events_wow_growth: identical Monday-aligned
-    integer week arithmetic, lag over the per-type weekly series,
-    growth NULL across gaps, one exactly-rounded division."""
-    return """
-WITH weekly AS (
-  SELECT event_type,
-         (epoch_ns(ts) // 1000000000 + 259200) // 604800 AS week_idx,
-         count(*) AS n_events
-  FROM events GROUP BY 1, 2),
-lagged AS (
-  SELECT *,
-         lag(n_events) OVER (PARTITION BY event_type ORDER BY week_idx)
-           AS prev,
-         lag(week_idx) OVER (PARTITION BY event_type ORDER BY week_idx)
-           AS pwk
-  FROM weekly)
-SELECT event_type, week_idx,
-       strftime(make_timestamp((week_idx * 604800 - 259200) * 1000000),
-                '%Y-%m-%d') AS week_start,
-       n_events,
-       CASE WHEN pwk = week_idx - 1 THEN prev END AS prev_events,
-       CASE WHEN pwk = week_idx - 1 AND prev > 0
-            THEN CAST(n_events AS DOUBLE) / CAST(prev AS DOUBLE)
-       END AS wow_growth
-FROM lagged
-ORDER BY event_type, week_idx"""
-
-
 def events_attribution_linear_sql() -> str:
     """Twin of queries.events_attribution_linear: the same trailing-
     hour (user, time) pair join, per-purchase touch count, and one
@@ -1683,23 +1271,6 @@ SELECT w.day, COALESCE(dau.dau, 0) AS dau, w.wau,
          AS stickiness
 FROM wau w LEFT JOIN dau ON dau.day = w.day
 ORDER BY w.day"""
-
-
-def events_value_percentiles_sql() -> str:
-    """Twin of queries.events_value_percentiles: quantile_cont shares
-    Spark percentile's linear-interpolation definition over the exact
-    integer cents."""
-    return """
-SELECT event_type, count(*) AS n_events,
-       quantile_cont(c, 0.5) AS p50_cents,
-       quantile_cont(c, 0.9) AS p90_cents,
-       quantile_cont(c, 0.99) AS p99_cents,
-       max(c) AS max_cents
-FROM (SELECT event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-      FROM events) t
-GROUP BY event_type
-ORDER BY event_type"""
 
 
 def events_value_sketch_sql(k: int = 512) -> str:
@@ -1777,22 +1348,6 @@ GROUP BY event_type
 ORDER BY event_type"""
 
 
-def pricing_cube_sql() -> str:
-    """Twin of queries.pricing_cube: DuckDB CUBE with the same
-    grouping() flags and decimal-exact sums."""
-    return """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS sum_price,
-       count(*) AS count_order,
-       CAST(GROUPING(l_returnflag) AS INTEGER) AS g_flag,
-       CAST(GROUPING(l_linestatus) AS INTEGER) AS g_status
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY g_flag, g_status, l_returnflag, l_linestatus"""
-
-
 def nation_top_customer_list_sql() -> str:
     """Twin of queries.nation_top_customer_list: window top-3 per
     nation (== the sharded two-level rank) and DuckDB's ordered
@@ -1846,37 +1401,6 @@ SELECT user_id, event_type, episode,
 FROM episodes
 GROUP BY user_id, event_type, episode
 ORDER BY user_id, event_type, episode"""
-
-
-def nation_pareto_cutoff_sql() -> str:
-    """Twin of queries.nation_pareto_cutoff: identical rank/cumsum
-    windows and the same 5·cum ≥ 4·total integer test."""
-    return """
-WITH rev AS (
-  SELECT n.n_name, c.c_custkey,
-         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-           AS rev_cents
-  FROM orders o
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation n ON n.n_nationkey = c.c_nationkey
-  GROUP BY 1, 2),
-ranked AS (
-  SELECT *,
-         row_number() OVER w AS r,
-         CAST(SUM(rev_cents) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS BIGINT) AS cum,
-         CAST(SUM(rev_cents) OVER (PARTITION BY n_name) AS BIGINT)
-           AS total
-  FROM rev
-  WINDOW w AS (PARTITION BY n_name ORDER BY rev_cents DESC, c_custkey))
-SELECT n_name, count(*) AS n_customers,
-       CAST(SUM(rev_cents) AS BIGINT) AS total_cents,
-       CAST(MIN(CASE WHEN 5 * cum >= 4 * total THEN r END) AS INTEGER)
-         AS n80,
-       CAST(MIN(CASE WHEN 5 * cum >= 4 * total THEN r END) AS DOUBLE)
-         / CAST(count(*) AS DOUBLE) AS n80_share
-FROM ranked
-GROUP BY n_name ORDER BY n_name"""
 
 
 def events_bot_regularity_sql() -> str:

@@ -336,23 +336,17 @@ def rates_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest combined rates (bucket='top'), the 10 lowest NONZERO rates
     (bucket='low'), and every no-sales-tax state (bucket='zero') in one
     marker-tagged union — O1 + O2 + P5 under a single hash gate."""
-    rates = load_dims(spark).state_rates
-    cols = ["state_code", "state_name", _d("avg_combined_rate")]
-    top = (
-        rates.select(*cols)
-        .orderBy(F.desc("avg_combined_rate"), "state_code")
-        .limit(10)
-        .select(F.lit("top").alias("bucket"), "*")
-    )
-    low = (
-        rates.filter(F.col("base_rate") > 0)
-        .select(*cols)
-        .orderBy("avg_combined_rate", "state_code")
-        .limit(10)
-        .select(F.lit("low").alias("bucket"), "*")
-    )
-    zero = rates.filter(F.col("base_rate") == 0).select(
-        F.lit("zero").alias("bucket"), *cols
+    top = rates_top10(spark, sf_dir).select(F.lit("top").alias("bucket"), "*")
+    low = rates_lowest10(spark, sf_dir).select(F.lit("low").alias("bucket"), "*")
+    zero = (
+        load_dims(spark)
+        .state_rates.filter(F.col("base_rate") == 0)
+        .select(
+            F.lit("zero").alias("bucket"),
+            "state_code",
+            "state_name",
+            _d("avg_combined_rate"),
+        )
     )
     return top.unionByName(low).unionByName(zero)
 
@@ -960,37 +954,6 @@ def events_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling event-time RANGE window per user: for every event, the
-    count and exact-decimal value sum of that user's events in the
-    trailing hour (frame = RANGE 3599 seconds PRECEDING .. CURRENT ROW
-    over integer epoch seconds — peers at the same second are all
-    included, so ties are deterministic without a row tiebreak).
-
-    The §2.5-class window the reference lacks: one hash shuffle on
-    user_id, then a sorted range scan within each partition — no second
-    shuffle, scale-safe as long as a single user's history fits a
-    partition (the same bound any per-key window has)."""
-    from pyspark.sql.window import Window
-
-    ev = _events_with_ts_sec(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_sec")
-        .rangeBetween(-3599, 0)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.col("ts_sec").alias("ts_sec"),
-        F.count("*").over(w).alias("n_1h"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("value_1h"),
-    )
-
-
 def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense hourly series per event type with LOCF interpolation
     (operators/temporal.py gapfill_locf): the full min→max hour spine,
@@ -1160,764 +1123,6 @@ def part_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(price * (one - disc)).cast("double").alias("revenue"),
             F.count("*").alias("n_items"),
         )
-    )
-
-
-def part_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17-shaped correlated scalar: per-brand yearly revenue lost
-    to SMALL-QUANTITY orders — lineitems whose quantity sits under 20%
-    of that part's average order quantity (the reference-class
-    correlated aggregate: the threshold depends on the outer row's
-    part).
-
-    Decorrelation: the brand dimension broadcast-prunes lineitem, then
-    ONE window (`avg over partition by l_partkey`) computes every
-    part's average in a single pass over the pruned stream — no per-row
-    subquery, no second lineitem scan (the two-scan agg+join-back
-    decorrelation was the alternative; the window reuses the same
-    shuffle).
-
-    Bit-portable: quantities are integral doubles, so their sums are
-    exact at any order and avg = one deterministic IEEE division; the
-    revenue sum rides DECIMAL and converts to double once, then one
-    division by 7."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    from pyspark.sql.window import Window
-
-    brands = ["Brand#1", "Brand#11", "Brand#21"]
-    pruned = li.join(
-        F.broadcast(
-            part.filter(F.col("p_brand").isin(brands)).select(
-                "p_partkey", "p_brand"
-            )
-        ),
-        F.col("l_partkey") == F.col("p_partkey"),
-    )
-    w = Window.partitionBy("l_partkey")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    return (
-        pruned.withColumn("_avg_qty", F.avg("l_quantity").over(w))
-        .filter(F.col("l_quantity") < F.lit(0.2) * F.col("_avg_qty"))
-        .groupBy("p_brand")
-        .agg(
-            (F.sum(price).cast("double") / F.lit(7.0)).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-def supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20-shaped per-group correlated threshold: suppliers who
-    shipped MORE THAN HALF of a part's total 1997 volume, with how many
-    parts they dominate that way.  (The reference Q20 compares partsupp
-    availability to 50% of shipped volume; this corpus carries no
-    partsupp table, so the same correlated-threshold-then-semi-join
-    shape runs supplier-share-vs-part-total.)
-
-    Decorrelation: ONE aggregate to (suppkey, partkey) quantity cells
-    — integral-double sums, exact at any order — then a window sum
-    over partkey turns the correlated `total per part` scalar into a
-    second pass over the SAME shuffle layout (partkey ⊂ grouping key,
-    no extra exchange); the filter and the ≤|suppliers| broadcast name
-    join finish it.  No per-row subquery, one lineitem scan."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    from pyspark.sql.window import Window
-
-    cells = (
-        li.join(
-            orders.filter(F.year("o_orderdate") == 1997).select("o_orderkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum("l_quantity").alias("_qty"))
-    )
-    w = Window.partitionBy("l_partkey")
-    dominant = cells.withColumn("_total", F.sum("_qty").over(w)).filter(
-        F.col("_qty") > F.lit(0.5) * F.col("_total")
-    )
-    return (
-        dominant.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_parts"))
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_name", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_name", F.col("n_name").alias("nation"), "n_parts")
-        .orderBy("s_name")
-    )
-
-
-def supplier_wait_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21-shaped EXISTS + NOT EXISTS chain: suppliers who were
-    the SOLE late shipper on multi-supplier finished orders.  A line is
-    late when it ships more than 60 days after the order date (the
-    reference compares receipt to commit dates; this corpus carries
-    ship and order dates).  For each late line l1 on an 'F' order:
-    EXISTS another supplier's line on the same order, NOT EXISTS
-    another supplier's line that is ALSO late — count such lines per
-    supplier.
-
-    Plan shape — the chain COLLAPSES TO ONE PASS: per order, the three
-    correlated conditions are functions of two distinct-counts
-    (EXISTS another supplier ⇔ n_suppliers ≥ 2; NOT EXISTS another
-    late supplier ⇔ n_late_suppliers = 1, in which case every late
-    line belongs to that single supplier), so one groupBy(l_orderkey)
-    with conditional aggregates replaces the textbook LEFT SEMI + LEFT
-    ANTI decorrelation's THREE passes over the fact join — 2 shuffles
-    total instead of re-reading lineitem per subquery, the win that
-    matters at 100 TB.  The DuckDB twin keeps the literal
-    EXISTS + NOT EXISTS formulation, so the sweep bit-exactly pins the
-    rewrite's equivalence."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-
-    late = (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    )
-    per_order = (
-        li.join(
-            orders.filter(F.col("o_orderstatus") == "F").select(
-                "o_orderkey", "o_orderdate"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select("l_orderkey", "l_suppkey", late.alias("_late"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.countDistinct("l_suppkey").alias("_n_supp"),
-            F.countDistinct(
-                F.when(F.col("_late"), F.col("l_suppkey"))
-            ).alias("_n_late_supp"),
-            F.max(F.when(F.col("_late"), F.col("l_suppkey"))).alias(
-                "_late_supp"
-            ),
-            F.sum(F.col("_late").cast("long")).alias("_n_late_lines"),
-        )
-        .filter((F.col("_n_supp") >= 2) & (F.col("_n_late_supp") == 1))
-    )
-    return (
-        per_order.groupBy("_late_supp")
-        .agg(F.sum("_n_late_lines").alias("numwait"))
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_name")),
-            F.col("_late_supp") == F.col("s_suppkey"),
-        )
-        .select("s_name", "numwait")
-        .orderBy(F.desc("numwait"), "s_name")
-    )
-
-
-def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-shaped EXISTS semi-join: per order priority, how many
-    1997-H1 orders had AT LEAST ONE late lineitem (shipping more than
-    60 days after the order date — the ship-vs-order stand-in this
-    corpus supports for Q4's commit-vs-receipt test).
-
-    Plan shape: the EXISTS lowers to one LEFT SEMI join on the order
-    key (the date predicate referencing both sides rides the join as a
-    residual condition), then a ≤5-row aggregate.  The orders date
-    filter pushes to the scan."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    window = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    ).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    return (
-        window.join(
-            li.select("l_orderkey", "l_shipdate"),
-            (F.col("o_orderkey") == F.col("l_orderkey"))
-            & (
-                F.col("l_shipdate")
-                > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-            ),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-shaped correlated HAVING: customers who placed an order
-    whose total lineitem quantity exceeds the threshold — the classic
-    group-filter-then-rejoin shape (the subquery's HAVING SUM(qty)
-    becomes one aggregate whose survivors semi-drive the detail joins).
-
-    Plan shape: ONE groupBy(l_orderkey) with an integral-double sum
-    (exact at any order), the > filter, then broadcast-friendly joins
-    back to orders and customer for the names; no per-row subquery,
-    one lineitem scan."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > F.lit(230.0))
-    )
-    return (
-        big.join(
-            orders.select(
-                "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_name")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",  # raw double passthrough: no rounding risk
-            "total_qty",
-        )
-        .orderBy(F.desc("total_qty"), "o_orderkey")
-    )
-
-
-def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22-shaped global-scalar + anti-join: per nation, the count
-    and total balance of ABOVE-AVERAGE-balance customers who placed no
-    1998 order — would-be spenders going idle.  The average is the
-    global mean of positive account balances: a correlated scalar every
-    row compares against.
-
-    Plan shape: the scalar decorrelates into a 1-row aggregate built
-    from a SEPARATE scan lineage (a self-lineage agg-rejoin trips
-    Spark's ambiguous-reference analysis) and broadcast-crossed onto
-    the customer scan; the no-orders test is one LEFT ANTI join; the
-    balance sums ride DECIMAL and convert to double once at the edge."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    bal = F.col("c_acctbal").cast("decimal(18,2)")
-    avg_bal = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .filter(F.col("c_acctbal") > 0.0)
-        .agg(
-            (
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast(
-                    "double"
-                )
-                / F.count(F.lit(1)).cast("double")
-            ).alias("_avg")
-        )
-    )
-    recent = orders.filter(F.year("o_orderdate") == 1998).select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return (
-        customer.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal").cast("double") > F.col("_avg"))
-        .join(recent, "c_custkey", "left_anti")
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(bal).cast("double").alias("totacctbal"),
-        )
-        .orderBy("nation")
-    )
-
-
-def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13-shaped left-join count distribution: how many customers
-    placed exactly k qualifying orders (urgent orders excluded, the
-    stand-in for Q13's comment-pattern exclusion), INCLUDING the
-    zero-order customers a plain join would drop.
-
-    Plan shape: one LEFT OUTER join (count(o_orderkey) skips the
-    nulls), then two ≤|customers| aggregates — the distribution
-    groupBy's input is already one row per customer."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    per_cust = (
-        customer.select("c_custkey")
-        .join(
-            orders.filter(F.col("o_orderpriority") != "1-URGENT").select(
-                "o_orderkey", "o_custkey"
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-def revenue_forecast_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-shaped what-if scalar: revenue that would have been added
-    by eliminating a band of small discounts on low-quantity 1997 lines
-    — sum(extendedprice · discount) under three conjunctive range
-    predicates, all of which push to the parquet scan.
-
-    Plan shape: no join at all — one scan with every filter pushed
-    (shipdate range, discount band, quantity cap), then one scalar
-    aggregate (exempted in GLOBAL_AGG_OK: the result IS one row).
-    Revenue rides DECIMAL (prices 18,2 × discounts 4,2) and converts to
-    double once at the edge."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & F.col("l_discount").between(0.03, 0.05)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(price * disc).cast("double").alias("revenue_delta"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7-shaped bilateral trade volume: 1996-1997 shipped revenue
-    between NATION_1 and NATION_2 in BOTH directions (supplier's nation
-    ≠ customer's nation by construction of the pair filter), grouped by
-    (supp_nation, cust_nation, ship year).
-
-    Plan shape: the two nation-pruned dimension sides (supplier⋈nation,
-    customer⋈nation) broadcast onto the fact stream — the pair
-    disjunction is evaluated after both names are attached, exactly the
-    cross-side predicate that keeps either dim from absorbing it alone.
-    One fact shuffle (orders⋈lineitem), ≤4-group aggregate."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    pair = ("NATION_1", "NATION_2")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    supp_side = supplier.join(
-        nation.filter(F.col("n_name").isin(*pair)).select(
-            "n_nationkey", F.col("n_name").alias("supp_nation")
-        ),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    ).select("s_suppkey", "supp_nation")
-    cust_side = customer.join(
-        nation.filter(F.col("n_name").isin(*pair)).select(
-            F.col("n_nationkey").alias("_cnk"),
-            F.col("n_name").alias("cust_nation"),
-        ),
-        F.col("c_nationkey") == F.col("_cnk"),
-    ).select("c_custkey", "cust_nation")
-    return (
-        li.filter(F.year("l_shipdate").isin(1996, 1997))
-        .join(
-            orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(supp_side), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cust_side), F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("l_year"),
-        )
-        .agg(F.sum(price * (one - disc)).cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8-shaped market share: NATION_3 suppliers' share of EUROPE's
-    STANDARD-part order revenue, by order year — the
-    conditional-sum-over-sum ratio whose numerator condition lives on a
-    DIFFERENT dimension (supplier nation) than the group key (order
-    year) or the scope filters (customer region, part type).
-
-    Plan shape: all five dimension sides broadcast; one fact shuffle;
-    per-year ratio = two DECIMAL sums (conditional and total) each cast
-    to double once, then ONE exactly-rounded IEEE division — bit-equal
-    on any engine."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    vol = price * (one - disc)
-    euro_cust = (
-        customer.join(
-            F.broadcast(
-                nation.join(
-                    F.broadcast(
-                        region.filter(F.col("r_name") == "EUROPE").select(
-                            "r_regionkey"
-                        )
-                    ),
-                    F.col("n_regionkey") == F.col("r_regionkey"),
-                ).select("n_nationkey")
-            ),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        ).select("c_custkey")
-    )
-    supp_nation = supplier.join(
-        F.broadcast(
-            nation.select(
-                F.col("n_nationkey").alias("_snk"),
-                F.col("n_name").alias("supp_nation"),
-            )
-        ),
-        F.col("s_nationkey") == F.col("_snk"),
-    ).select("s_suppkey", "supp_nation")
-    target = F.col("supp_nation") == "NATION_3"
-    return (
-        li.join(
-            F.broadcast(
-                part.filter(F.col("p_type") == "STANDARD").select("p_partkey")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(
-            orders.select("o_orderkey", "o_custkey", "o_orderdate"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(euro_cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.when(target, vol)).cast("double").alias("_target_rev"),
-            F.sum(vol).cast("double").alias("total_revenue"),
-        )
-        .select(
-            "o_year",
-            (F.col("_target_rev") / F.col("total_revenue")).alias("mkt_share"),
-            "total_revenue",
-        )
-        .orderBy("o_year")
-    )
-
-
-def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10-shaped returned-item report: the 20 customers who cost
-    the most revenue in returned ('R') lineitems against 1997-Q1 orders
-    — who to call first about return fraud / fulfilment quality.
-
-    Plan shape: the order date filter prunes the fact join's probe side
-    BEFORE the shuffle, the returnflag filter pushes to the lineitem
-    scan, customer + nation broadcast, and the global top-20 lowers to
-    TakeOrderedAndProject.  DECIMAL revenue, double at the edge."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    return (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(
-            orders.filter(
-                (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-            ).select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(
-                customer.select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
-        .agg(F.sum(price * (one - disc)).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-def important_part_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-shaped important-stock scan: parts whose NATION_0-supplied
-    shipped value exceeds 0.1% of ALL NATION_0-supplied value — the
-    per-group-vs-global-scalar HAVING (this corpus has no partsupp, so
-    shipped lineitem value stands in for stock value; same shape).
-
-    Decorrelation: the global total is a 1-row aggregate built from a
-    SEPARATE scan lineage (a self-lineage agg-rejoin trips Spark's
-    ambiguous-reference analysis — see idle_rich_customers) and
-    broadcast-crossed onto the ≤|parts| per-part value table.  The
-    threshold compare runs in double (one rounded multiply per side,
-    identical on both engines); the values themselves ride DECIMAL."""
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    n0_supps = F.broadcast(
-        supplier.join(
-            nation.filter(F.col("n_name") == "NATION_0").select("n_nationkey"),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        ).select("s_suppkey")
-    )
-
-    def _n0_value_stream(li: DataFrame) -> DataFrame:
-        return li.join(n0_supps, F.col("l_suppkey") == F.col("s_suppkey"))
-
-    per_part = (
-        _n0_value_stream(spark.read.parquet(f"{sf_dir}/lineitem.parquet"))
-        .groupBy("l_partkey")
-        .agg(F.sum(price).alias("_value"))
-    )
-    total = _n0_value_stream(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ).agg(F.sum(price).cast("double").alias("_total"))
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(
-            F.col("_value").cast("double") > F.lit(0.001) * F.col("_total")
-        )
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.col("_value").cast("double").alias("stock_value"),
-        )
-        .orderBy(F.desc("stock_value"), "p_partkey")
-    )
-
-
-def shipping_delay_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12-shaped shipping-performance crosstab: 1997 lineitems
-    bucketed by order→ship delay (FAST <30d, NORMAL <90d, SLOW ≥90d —
-    the stand-in for Q12's shipmode, which this corpus doesn't carry),
-    with urgent/high-priority vs lower-priority line counts per bucket
-    (the classic two-conditional-sum CASE aggregation).
-
-    Plan shape: ship-year filter pushes to the lineitem scan, one fact
-    join to fetch the order date + priority, 3-group aggregate."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    delay = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    bucket = (
-        F.when(delay < 30, "FAST").when(delay < 90, "NORMAL").otherwise("SLOW")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.filter(F.year("l_shipdate") == 1997)
-        .select("l_orderkey", "l_shipdate")
-        .join(
-            orders.select("o_orderkey", "o_orderdate", "o_orderpriority"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy(bucket.alias("delay_bucket"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
-        )
-        .orderBy("delay_bucket")
-    )
-
-
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14-shaped promotion effect: the percentage of 1997-09
-    shipped revenue attributable to PROMO-type parts — conditional sum
-    over total sum, as one scalar row (GLOBAL_AGG_OK).
-
-    Bit-portable ratio: both sums ride DECIMAL, each converts to double
-    once, and the 100·promo/total expression is two exactly-rounded
-    IEEE ops evaluated identically by both engines."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    vol = price * (one - disc)
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
-        )
-        .join(
-            F.broadcast(part.select("p_partkey", "p_type")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", vol))
-            .cast("double")
-            .alias("_promo_rev"),
-            F.sum(vol).cast("double").alias("total_revenue"),
-        )
-        .select(
-            (F.lit(100.0) * F.col("_promo_rev") / F.col("total_revenue")).alias(
-                "promo_pct"
-            ),
-            "total_revenue",
-        )
-    )
-
-
-def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15-shaped top supplier: the supplier(s) whose 1997-Q1
-    shipped revenue equals the maximum over all suppliers — the
-    view-then-max-equality shape, ties kept.
-
-    Decorrelation: revenue aggregates once to the ≤|suppliers| table;
-    the max rides an UNPARTITIONED window over that tiny frame (one row
-    per supplier through the exchange, never data rows — GLOBAL_AGG_OK;
-    the alternative agg-rejoin trips Spark's self-lineage analysis).
-    The equality compare runs in DECIMAL — exact, no float tie risk."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    from pyspark.sql.window import Window
-
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    rev = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(F.sum(price * (one - disc)).alias("_rev"))
-    )
-    w = Window.partitionBy()
-    return (
-        rev.withColumn("_max", F.max("_rev").over(w))
-        .filter(F.col("_rev") == F.col("_max"))
-        .join(
-            F.broadcast(supplier.select("s_suppkey", "s_name")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("_rev").cast("double").alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-shaped cheapest-supplier lookup: for each mid-size
-    STANDARD part, the EUROPE supplier who shipped it at the lowest
-    observed unit price (extendedprice/quantity — this corpus has no
-    partsupp, so shipped unit price stands in for supplycost; same
-    correlated-min + equality-join-back shape), min-suppkey tiebreak.
-
-    Decorrelation: ONE window (`min over partition by l_partkey`) on
-    the region-and-part-pruned stream — the same shuffle the equality
-    filter then reuses; no per-row subquery, one lineitem scan.  The
-    unit price is a single IEEE division of parquet doubles, computed
-    identically by both engines, so the min-equality is bit-safe."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    from pyspark.sql.window import Window
-
-    euro_supp = supplier.join(
-        F.broadcast(
-            nation.join(
-                F.broadcast(
-                    region.filter(F.col("r_name") == "EUROPE").select(
-                        "r_regionkey"
-                    )
-                ),
-                F.col("n_regionkey") == F.col("r_regionkey"),
-            ).select("n_nationkey", "n_name")
-        ),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    ).select("s_suppkey", "s_name", F.col("n_name").alias("nation"))
-    pruned = (
-        li.join(
-            F.broadcast(
-                part.filter(
-                    (F.col("p_type") == "STANDARD")
-                    & F.col("p_size").between(10, 20)
-                ).select("p_partkey", "p_brand")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(F.broadcast(euro_supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("_unit", F.col("l_extendedprice") / F.col("l_quantity"))
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        pruned.withColumn("_min", F.min("_unit").over(w))
-        .filter(F.col("_unit") == F.col("_min"))
-        .groupBy("p_partkey", "p_brand", F.col("_min").alias("unit_cost"))
-        .agg(F.min(F.struct("s_suppkey", "s_name", "nation")).alias("_s"))
-        .select(
-            "p_partkey",
-            "p_brand",
-            F.col("_s.s_name").alias("s_name"),
-            F.col("_s.nation").alias("nation"),
-            "unit_cost",
-        )
-        .orderBy(F.desc("unit_cost"), "p_partkey")
-        .limit(100)
-    )
-
-
-def part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16-shaped supplier-variety count: distinct suppliers who
-    shipped each (brand, type, size) of the non-Brand#2 parts in six
-    target sizes, EXCLUDING negative-balance suppliers (the NOT IN
-    complaints exclusion → one broadcast LEFT ANTI join).
-
-    Plan shape: part filter broadcast-prunes the fact stream, the
-    exclusion list broadcasts (≤|suppliers|), and COUNT(DISTINCT)
-    lowers to Spark's two-level expand-aggregate — no row explosion
-    beyond the group×supplier distinct cells."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    bad_supps = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
-        li.join(
-            F.broadcast(
-                part.filter(
-                    (F.col("p_brand") != "Brand#2")
-                    & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
-                ).select("p_partkey", "p_brand", "p_type", "p_size")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(
-            F.broadcast(bad_supps),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -2284,65 +1489,6 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("hour_sec")
 
 
-def events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT/melt — the inverse of events_pivot: the wide hour × type
-    matrix back to long (hour_sec, event_type, n) rows, zero cells
-    dropped.  Round-tripping through the pivoted matrix (rather than
-    just re-aggregating) exercises the wide→long operator itself;
-    stack() is row-local, so the melt adds NO shuffle to the pivot
-    plan."""
-    wide = events_pivot(spark, sf_dir)
-    stack_args = ", ".join(f"'{t}', n_{t}" for t in EVENT_TYPES)
-    return (
-        wide.select(
-            "hour_sec",
-            F.expr(
-                f"stack({len(EVENT_TYPES)}, {stack_args}) "
-                "AS (event_type, n)"
-            ),
-        )
-        .filter(F.col("n") > 0)
-        .orderBy("hour_sec", "event_type")
-    )
-
-
-def events_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week growth per event type: Monday-aligned integer
-    week counts (same arithmetic as events_retention — no engine
-    date_trunc('week') semantics in play), the previous week's count
-    via lag over the per-type week series, and the growth ratio as one
-    exactly-rounded int/int division (NULL on the first week and weeks
-    following an absent week — gaps are explicit, not interpolated).
-
-    Scale shape: one (type, week) count with map-side combine, then a
-    lag window over the tiny dense-ish series — the raw stream never
-    enters a window."""
-    from pyspark.sql.window import Window
-
-    ev = _events_with_ts_sec(spark, sf_dir)
-    wk = F.expr(f"(ts_sec + {_WEEK_SHIFT}) div {_WEEK_SEC}")
-    weekly = ev.groupBy(
-        "event_type", wk.alias("week_idx")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    w = Window.partitionBy("event_type").orderBy("week_idx")
-    prev = F.lag("n_events").over(w)
-    prev_wk = F.lag("week_idx").over(w)
-    contiguous = prev_wk == F.col("week_idx") - 1
-    return weekly.select(
-        "event_type",
-        "week_idx",
-        F.from_unixtime(
-            F.col("week_idx") * _WEEK_SEC - _WEEK_SHIFT, "yyyy-MM-dd"
-        ).alias("week_start"),
-        "n_events",
-        F.when(contiguous, prev).alias("prev_events"),
-        F.when(
-            contiguous & (prev > 0),
-            F.col("n_events").cast("double") / prev.cast("double"),
-        ).alias("wow_growth"),
-    ).orderBy("event_type", "week_idx")
-
-
 def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every purchase's value is split
     EQUALLY across the same user's clicks in the trailing hour (the
@@ -2457,35 +1603,9 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type exact value percentiles (p50/p90/p99 over integer
-    cents, count, max): the latency/value-distribution rollup, exact
-    via sort-based percentile — Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` share the same linear-interpolation definition,
-    so the doubles are bit-identical (the corpus_length_profile
-    precedent).  At extreme scale approx_percentile is the mergeable
-    one-pass drop-in; kept exact here so the oracle can gate it."""
-    ev = _events_with_ts_sec(spark, sf_dir)
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    return (
-        ev.select("event_type", cents.alias("_c"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.expr("percentile(_c, 0.5)").alias("p50_cents"),
-            F.expr("percentile(_c, 0.9)").alias("p90_cents"),
-            F.expr("percentile(_c, 0.99)").alias("p99_cents"),
-            F.max("_c").alias("max_cents"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def events_value_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type APPROXIMATE value quantiles with O(k) state per group —
-    the 100-TB scale path next to ``events_value_percentiles``' exact
-    sort (the same exact-vs-estimate pairing as
-    dedup_minhash_pairs / dedup_minhash_est_pairs): exact interpolated
+    """Per-type APPROXIMATE value quantiles with O(k) state per group
+    instead of an exact per-type sort: exact interpolated
     p50/p90/p99 of a fixed 512-row deterministic uniform sample per
     event type (min-512 by the LCG hash of event_id — an associative,
     idempotent, MERGEABLE fold, so partial aggregation bounds shuffle
@@ -2542,33 +1662,6 @@ def events_reach_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_reach_sketch(
         ev.select("event_type", "user_id"), ["event_type"], "user_id", k=64
     ).orderBy("event_type")
-
-
-def pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CUBE over (returnflag, linestatus): every subtotal
-    combination — both one-dimension margins and the grand total — in
-    ONE aggregation pass (completes the multi-level family next to
-    pricing_rollup's hierarchy; grouping() flags disambiguate NULL data
-    values from subtotal rows).  Decimal-exact sums, map-side
-    combinable: CUBE expands each input row to its 4 grouping-set
-    replicas BEFORE the partial aggregation, so the shuffle carries
-    only (2+|flag|)·(2+|status|) group rows."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-            F.count(F.lit(1)).alias("count_order"),
-            F.grouping("l_returnflag").cast("int").alias("g_flag"),
-            F.grouping("l_linestatus").cast("int").alias("g_status"),
-        )
-        .orderBy("g_flag", "g_status", "l_returnflag", "l_linestatus")
-    )
 
 
 def nation_top_customer_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2668,81 +1761,6 @@ def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts_us").alias("end_us"),
         )
         .orderBy("user_id", "event_type", "episode")
-    )
-
-
-def nation_pareto_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto concentration per nation: the MINIMUM number of customers
-    whose (revenue-ranked) prefix covers ≥ 80% of the nation's revenue
-    (N80), plus the share of customers that is — the "how top-heavy is
-    this market" statistic next to customer_value_deciles' global
-    Lorenz view.
-
-    Integer-exact: revenue in cents, the 80% test as the cross-
-    multiplication 5·cum ≥ 4·total (no float threshold), N80 = min rank
-    among qualifying rows; the one double is the final exactly-rounded
-    N80/n division.
-
-    Scale shape: one keyed aggregation to (nation, customer) cents,
-    then per-nation rank/cumsum windows over those narrow rows — the
-    same per-key-window bound as every grouped quantile (25 nations
-    here; at a hotter group cardinality the sharded rank applies as in
-    customer_value_deciles)."""
-    from pyspark.sql.window import Window
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    rev = (
-        orders.join(
-            F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"]
-        )
-        .join(
-            F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"]
-        )
-        .groupBy("n_name", "c_custkey")
-        .agg(
-            (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
-            .cast("long")
-            .alias("rev_cents")
-        )
-    )
-    w = Window.partitionBy("n_name").orderBy(
-        F.desc("rev_cents"), F.asc("c_custkey")
-    )
-    cum = F.sum("rev_cents").over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        rev.withColumn("_rank", F.row_number().over(w))
-        .withColumn("_cum", cum)
-        .withColumn(
-            "_total",
-            F.sum("rev_cents").over(Window.partitionBy("n_name")),
-        )
-    )
-    return (
-        ranked.groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("rev_cents").alias("total_cents"),
-            F.min(
-                F.when(
-                    5 * F.col("_cum") >= 4 * F.col("_total"), F.col("_rank")
-                )
-            ).alias("n80"),
-        )
-        .select(
-            "n_name",
-            "n_customers",
-            "total_cents",
-            F.col("n80").cast("int").alias("n80"),
-            (
-                F.col("n80").cast("double")
-                / F.col("n_customers").cast("double")
-            ).alias("n80_share"),
-        )
-        .orderBy("n_name")
     )
 
 

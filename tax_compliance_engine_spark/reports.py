@@ -86,7 +86,6 @@ def tax_summary_report(
     state_summary: DataFrame,
     period_label: str = "",
     generated_date: dt.date | None = None,
-    errors: list[str] | None = None,
 ) -> dict[str, Any]:
     """Tax liability summary (report_generator.py:73-130) from
     ``tax.batch_totals`` + ``tax.state_summary`` DataFrames."""
@@ -125,7 +124,7 @@ def tax_summary_report(
             "overall_effective_rate": overall_rate,
         },
         "state_breakdown": states,
-        "errors": errors or [],
+        "errors": [],
     }
 
 
@@ -246,29 +245,24 @@ def refund_report(
     reason_breakdown: DataFrame,
     records: DataFrame,
     warnings: DataFrame,
-    claims: DataFrame | None = None,
+    claims: DataFrame,
     generated_date: dt.date | None = None,
 ) -> dict[str, Any]:
     """Refund opportunity report (report_generator.py:245-310) from the
     ``refund.refund_summary`` / ``refund.refund_claims`` outputs."""
-    sections = _collect_all(
+    (s,), states, reasons, details, warning_rows, claim_rows = _collect_all(
         summary,
         state_breakdown.orderBy(F.desc("amount"), "state"),
         reason_breakdown.orderBy(F.desc("amount"), "reason"),
         records,
         warnings,
-        *([] if claims is None else [claims]),
+        claims,
     )
-    (s,), states, reasons, details, warning_rows = sections[:5]
-    report: dict[str, Any] = {
+    return {
         "report_type": "refund_analysis",
         "generated_date": _today(generated_date),
         "summary": {
-            "transactions_reviewed": (
-                s["total_transactions_reviewed"]
-                if "total_transactions_reviewed" in summary.columns
-                else None
-            ),
+            "transactions_reviewed": s["total_transactions_reviewed"],
             "overpayments_found": s["overpayment_count"],
             "total_overpayment": s["total_overpayment"],
             "estimated_recovery": s["estimated_recovery"],
@@ -295,9 +289,7 @@ def refund_report(
             for r in _dicts(details)
         ],
         "warnings": [r["warning"] for r in _dicts(warning_rows)],
-    }
-    if claims is not None:
-        report["refund_claims"] = [
+        "refund_claims": [
             {
                 "state": c["state_code"],
                 "period": (
@@ -309,9 +301,9 @@ def refund_report(
                 "reasons": c["supporting_reasons"],
                 "notes": c["filing_notes"],
             }
-            for c in _dicts(sections[5])
-        ]
-    return report
+            for c in _dicts(claim_rows)
+        ],
+    }
 
 
 # ── sinks ────────────────────────────────────────────────────────────

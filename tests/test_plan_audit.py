@@ -102,19 +102,6 @@ GLOBAL_AGG_OK = {
     # (total, remainder rank, leftover seats) runs as unpartitioned
     # windows over the ≤|strata|-row count table — one row per stratum
     # through the exchange, never data rows
-    "idle_rich_customers",  # scalar global-average-balance aggregate
-    # (one partial row per task through the exchange), broadcast back
-    # onto the customer scan — the Q22 decorrelation
-    "revenue_forecast_delta",  # the result IS one scalar what-if row
-    # (partial aggregates through the exchange)
-    "promo_revenue_share",  # the result IS one scalar percentage row
-    # (partial aggregates through the exchange)
-    "top_revenue_supplier",  # unpartitioned max window over the
-    # ≤|suppliers|-row revenue table (one row per supplier through the
-    # exchange, never data rows) — the Q15 view-then-max shape
-    "important_part_stock",  # scalar global NATION_0 total (one
-    # partial row per task through the exchange), broadcast back onto
-    # the ≤|parts| per-part value table — the Q11 decorrelation
     "web_host_scorecard",  # embeds doc_bigram_lm's scalar V aggregate
     # (one partial row per task through the exchange); host rollup and
     # the two-level quality fold are host-keyed

@@ -82,6 +82,11 @@ def txns(spark, sf_dir):
         "refund_state_breakdown",
         "refund_reason_breakdown",
         "nexus_alerts",
+        "rates_extremes",
+        "rates_top10",
+        "rates_lowest10",
+        "no_tax_states",
+        "states_exempting_grocery",
     ],
 )
 def test_registry_query_matches_oracle(spark, sf_dir, oracle, name):
