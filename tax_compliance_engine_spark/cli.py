@@ -18,12 +18,12 @@ import datetime as dt
 import sys
 from decimal import Decimal
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import reports
 from .console import ROUNDED, SIMPLE, Table, panel
-from .dims import load_dims, local_frame
+from .dims import Dims, load_dims, local_frame
 from .operators import alerts as alerts_op
 from .operators import nexus, refund, tax
 from .rates_api import RateDatabase
@@ -256,6 +256,26 @@ def cmd_compliance(args: argparse.Namespace) -> None:
         print(f"JSON exported to {args.export_json}")
 
 
+def _refund_report(
+    txns: DataFrame, n_reviewed: int, dims: Dims, as_of: dt.date
+) -> dict:
+    """The refund report that ``refund`` and ``report`` print.  ``txns``
+    must be cached and already filled; the records stay uncached, so the
+    report's concurrent collects never race to fill the same block."""
+    records = refund.analyze_overpayments(txns, dims, as_of)
+    summary, state_bd, reason_bd, warnings = refund.refund_summary(
+        records, total_transactions_reviewed=n_reviewed
+    )
+    return reports.refund_report(
+        summary,
+        state_bd,
+        reason_bd,
+        records,
+        warnings,
+        refund.refund_claims(records),
+    )
+
+
 def cmd_refund(args: argparse.Namespace) -> None:
     spark = _spark()
     dims = load_dims(spark)
@@ -295,18 +315,11 @@ def cmd_refund(args: argparse.Namespace) -> None:
         print(f"\nPotential refunds found: {agg.n}  (${float(agg.total):,.2f})")
         return
 
-    n_reviewed = txns.count()
-    records = refund.analyze_overpayments(txns, dims, as_of).cache()
-    summary, state_bd, reason_bd, warnings = refund.refund_summary(
-        records, total_transactions_reviewed=n_reviewed
-    )
-    claims = refund.refund_claims(records)
-    report = reports.refund_report(
-        summary, state_bd, reason_bd, records, warnings, claims
-    )
+    txns = txns.cache()
+    # the count fills the txns cache before the concurrent report collects
+    report = _refund_report(txns, txns.count(), dims, as_of)
     print(reports.format_text(report))
-    claim_rows = claims.collect()
-    if claim_rows:
+    if report["refund_claims"]:
         print()
         table = Table(title="Refund Claims to File", box=ROUNDED)
         table.add_column("State")
@@ -314,13 +327,13 @@ def cmd_refund(args: argparse.Namespace) -> None:
         table.add_column("Amount", justify="right")
         table.add_column("Transactions", justify="right")
         table.add_column("Reasons")
-        for c in claim_rows:
+        for c in report["refund_claims"]:
             table.add_row(
-                c.state_code,
-                f"{c.claim_period_start} to {c.claim_period_end}",
-                f"${float(c.total_refund_requested):,.2f}",
-                str(c.transaction_count),
-                "; ".join(c.supporting_reasons[:2]),
+                c["state"],
+                c["period"],
+                f"${float(c['amount_requested']):,.2f}",
+                str(c["transaction_count"]),
+                "; ".join(c["reasons"][:2]),
             )
         print(table.render())
     if args.export_json:
@@ -344,15 +357,7 @@ def cmd_report(args: argparse.Namespace) -> None:
     )
     print(reports.format_text(tax_report))
 
-    records = refund.analyze_overpayments(txns, dims, as_of).cache()
-    summary, state_bd, reason_bd, warnings = refund.refund_summary(
-        records, total_transactions_reviewed=n_reviewed
-    )
-    claims = refund.refund_claims(records)
-    ref_report = reports.refund_report(
-        summary, state_bd, reason_bd, records, warnings, claims
-    )
-    print(reports.format_text(ref_report))
+    print(reports.format_text(_refund_report(txns, n_reviewed, dims, as_of)))
 
     if args.export_json:
         reports.to_json(

@@ -1491,11 +1491,10 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every purchase's value is split
-    EQUALLY across the same user's clicks in the trailing hour (the
-    batch twin of the streaming attribution monitor's problem, but
-    multi-touch instead of last-touch).  Emitted at PAIR grain —
-    (click, purchase, n_touches, share_cents) — so no float is ever
-    summed; the share is one exactly-rounded cents/int division.
+    EQUALLY across the same user's clicks in the trailing hour
+    (multi-touch, where ``events_asof`` is last-touch).  Emitted at PAIR
+    grain — (click, purchase, n_touches, share_cents) — so no float is
+    ever summed; the share is one exactly-rounded cents/int division.
     Purchases with no trailing click are absent (an outer arm would
     just restate events_asof).
 
@@ -1649,9 +1648,8 @@ def events_reach_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — KMV order statistics over the LCG-hashed user ids
     (``topk.grouped_reach_sketch``; ``corpus.distinct_sketch``'s
     estimator pointed at entity ids).  The 100-TB path next to an exact
-    count_distinct, and the batch twin of the streaming reach monitor:
-    two sketches merge by re-cutting the union, so per-partition,
-    per-day, or per-micro-batch partials compose exactly.
+    count_distinct: two sketches merge by re-cutting the union, so
+    per-partition or per-day partials compose exactly.
 
     Deterministic (hash order + one exactly-rounded division), so the
     DuckDB twin gates the ESTIMATE bit-for-bit — unlike

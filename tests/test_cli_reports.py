@@ -8,8 +8,8 @@ Inputs: ``SAMPLE`` is the reference's 57-row sample CSV
 The parity tests (per-row CSV parity, tax-summary and refund reports, the
 driver-side details export) run the reference library and are skipped
 where ``REFERENCE`` is absent. The sink, distributed-export, partition-pruning,
-report-file and ``python -m`` tests need only a transactions CSV and run on
-either input.
+report-file, refund-command and ``python -m`` tests need only a transactions
+CSV and run on either input.
 """
 
 from __future__ import annotations
@@ -311,6 +311,78 @@ def test_cli_report_file(capsys, tmp_path):
     assert "Tax Liability Summary" in out
     assert "Refund Analysis" in out
     assert (tmp_path / "r.json").exists()
+
+
+def _table_rows(text: str) -> list[list[str]]:
+    """Body cells of the one box table in ``text`` (header row dropped)."""
+    rows = [
+        [c.strip() for c in ln.strip("│").split("│")]
+        for ln in text.splitlines()
+        if ln.startswith("│")
+    ]
+    return rows[1:]
+
+
+def test_cli_refund_file(spark, dims, capsys, tmp_path):
+    """``refund`` exports the refund report the operators build, prints
+    each claim of that report in its claims table, and ``refund --quick``
+    lists the transactions of the quick scan."""
+    from tax_compliance_engine_spark.cli import main
+
+    as_of = dt.date.today()
+    main(
+        [
+            "refund",
+            "--file",
+            SAMPLE,
+            "--export-json",
+            "r.json",
+            "--output-dir",
+            str(tmp_path),
+        ]
+    )
+    out = capsys.readouterr().out
+
+    txns = scan_transactions_csv(spark, SAMPLE).transactions
+    records = refund.analyze_overpayments(txns, dims, as_of)
+    summary, state_bd, reason_bd, warnings = refund.refund_summary(
+        records, total_transactions_reviewed=txns.count()
+    )
+    want = reports.refund_report(
+        summary,
+        state_bd,
+        reason_bd,
+        records,
+        warnings,
+        refund.refund_claims(records),
+    )
+    exported = (tmp_path / "r.json").read_text()
+    assert exported == reports.to_json(want)
+    claims = json.loads(exported)["refund_claims"]
+    assert claims
+    assert "Refund Claims to File" in out
+    assert _table_rows(out) == [
+        [
+            c["state"],
+            c["period"],
+            f"${c['amount_requested']:,.2f}",
+            str(c["transaction_count"]),
+            "; ".join(c["reasons"][:2]),
+        ]
+        for c in claims
+    ]
+
+    main(["refund", "--file", SAMPLE, "--quick"])
+    out = capsys.readouterr().out
+    hits = refund.quick_scan(txns, dims, as_of, "0.50").collect()
+    assert "Quick Scan: Overpayments Found" in out
+    listed = {row[0] for row in _table_rows(out)}
+    assert listed == {h.transaction_id[:12] for h in hits}
+    assert f"Potential refunds found: {len(hits)} " in out
+    if SAMPLE != str(REFERENCE_SAMPLE):
+        # TX grocery is exempt, OR has no sales tax, and FL/Miami paid
+        # 7.5% where 7% is due: $2.00 over
+        assert listed == {"S003", "S004", "S005"}
 
 
 def test_partitioned_sink_prunes(spark, dims, spark_results, tmp_path):

@@ -37,23 +37,18 @@ BUILDER_MODULES = [
 ]
 
 # Data-ops streaming operators and source helpers that no entry point
-# imports; only their own tests (test_streaming, test_cdc, test_webops,
-# test_ann_and_stream_dedup, test_dataops, test_plan_audit) do.
+# imports; only their own tests (test_ann_and_stream_dedup, test_cdc,
+# test_dataops, test_webops, and test_streaming's LM screens) do.
 TEST_ONLY = {
     f"{PKG}.sources.bucketing",
     f"{PKG}.sources.corpus_io",
-    f"{PKG}.streaming.active_users",
     f"{PKG}.streaming.ann_stream",
-    f"{PKG}.streaming.attribution",
     f"{PKG}.streaming.cdc_stream",
     f"{PKG}.streaming.dedup_stream",
     f"{PKG}.streaming.enrich_stream",
     f"{PKG}.streaming.quality_stream",
-    f"{PKG}.streaming.quantile_stream",
     f"{PKG}.streaming.rollup_stream",
     f"{PKG}.streaming.search_stream",
-    f"{PKG}.streaming.sessionize",
-    f"{PKG}.streaming.trending",
     f"{PKG}.streaming.web_stream",
 }
 
